@@ -234,6 +234,128 @@ def test_input_coercion(engine):
     assert [r["f"] for r in rows] == [8.0, 9.0]
 
 
+def test_nan_passes_through_like_native_pow(engine):
+    # Arguments reach the guest as Arrow arrays: NaN stays NaN (a pandas
+    # hop would turn it into NULL) and NULL stays NULL, as native pow.
+    create_f1(engine)
+    rows = engine.sql(
+        "select f1(x, 1.0D) as f, pow(x, 1.0D) as p "
+        "from values (cast('NaN' as double)), (null) as t(x)"
+    ).collect()
+    assert math.isnan(rows[0]["f"]) and math.isnan(rows[0]["p"])
+    assert rows[1]["f"] is None and rows[1]["p"] is None
+
+
+def test_chunked_result(engine, tmp_path):
+    # A guest may return a ChunkedArray; it crosses back as one array.
+    mod = tmp_path / "chunked_udf.py"
+    mod.write_text(
+        "import pyarrow as pa\n"
+        "import pyarrow.compute as pc\n"
+        "\n"
+        "def double_chunked(args):\n"
+        "    [x] = args\n"
+        "    half = len(x) // 2\n"
+        "    return pa.chunked_array(\n"
+        "        [pc.multiply(x.slice(0, half), 2.0), pc.multiply(x.slice(half), 2.0)],\n"
+        "        type=pa.float64(),\n"
+        "    )\n"
+    )
+    engine.sql(
+        f"CREATE FUNCTION dbl(DOUBLE) RETURNS DOUBLE AS '{mod}!double_chunked'"
+    )
+    engine.register(
+        "r", engine.spark.range(0, 10, 1, 1).selectExpr("cast(id as double) as x")
+    )
+    rows = engine.sql("select x, dbl(x) as y from r order by x").collect()
+    assert [r["y"] for r in rows] == [2.0 * i for i in range(10)]
+
+
+def test_argument_cast_failure_protocol(engine):
+    # A value the declared argument type cannot hold fails inside the
+    # invocation error protocol, not as a raw Arrow error.
+    engine.sql(f"CREATE FUNCTION f1(INT, INT) RETURNS DOUBLE AS '{UDFS}!f1'")
+    with pytest.raises(Exception) as ei:
+        engine.sql("select f1(cast(1099511627776 as bigint), 1) as v").collect()
+    assert "[Wasm Invocation] argument cast to declared type failed" in str(ei.value)
+
+
+def test_result_cast_failure_protocol(engine):
+    # A result the declared return type cannot hold (2.5 as INT) likewise.
+    engine.sql(f"CREATE FUNCTION f1(DOUBLE, DOUBLE) RETURNS INT AS '{UDFS}!f1'")
+    with pytest.raises(Exception) as ei:
+        engine.sql("select f1(2.5D, 1.0D) as v").collect()
+    assert (
+        "[Wasm Invocation] result cast to declared return type failed"
+        in str(ei.value)
+    )
+
+
+def test_registers_nondeterministic_arrow_udf(engine, monkeypatch):
+    # CREATE FUNCTION registers a scalar Arrow UDF (Arrow arrays in and
+    # out, no pandas), kept nondeterministic (≙ Volatility::Volatile).
+    from pyspark.sql.udf import UDFRegistration
+    from pyspark.util import PythonEvalType
+
+    registered = {}
+    original = UDFRegistration.register
+
+    def recording(self, name, f, *args, **kwargs):
+        registered[name] = f
+        return original(self, name, f, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "register", recording)
+    create_f1(engine)
+    udf = registered["f1"]
+    assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
+    assert udf.deterministic is False
+
+
+def test_invoke_accepts_arrow_and_pandas_arguments():
+    """The wrapped function gives the same result for the Arrow arrays
+    Spark sends and for the pandas Series the benchmark's in-process
+    replay (``perfbench/workloads.py`` ``UdfTyped.replay``) passes to
+    ``.func``; runs without a Spark session."""
+    from decimal import Decimal
+
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from perfbench.workloads import UdfTyped
+    from wasaffi_spark.udf_runtime import build_pandas_udf
+
+    n = 512
+    batch = pa.table(UdfTyped("", 0).columns(np.random.default_rng(0), n))
+    assert batch.column("a").null_count and batch.column("s").null_count
+    assert batch.column("v").null_count
+    guest = os.path.join(REPO, "perfbench", "guest.py")
+    double = T.DoubleType()
+
+    def col(name):
+        return batch.column(name).combine_chunks()
+
+    # (module, method, arg types, return type, Arrow args as Spark sends
+    # them), in the replay's call order
+    cases = [
+        (UDFS, "f1", [double, double], double,
+         [col("a"), pa.array([Decimal("2.0")] * n)]),  # DECIMAL(2,1) literal
+        (UDFS, "f1", [double, double], double,
+         [col("k"), pa.array([2] * n, pa.int32())]),  # BIGINT, INT literal
+        (UDFS, "str_len_upper", [T.StringType()], T.LongType(), [col("s")]),
+        (guest, "vec_norm", [T.ArrayType(T.FloatType())], double, [col("v")]),
+    ]
+    assert [name for name, _ in UdfTyped.replay] == ["f1", "f1", "slen", "vnorm"]
+    for (name, makers), case in zip(UdfTyped.replay, cases):
+        module, method, arg_types, ret, arrow_args = case
+        invoke = build_pandas_udf(module, method, arg_types, ret).func
+        from_arrow = invoke(*arrow_args)
+        from_pandas = invoke(*[make(batch) for make in makers])
+        assert isinstance(from_arrow, pa.Array)
+        assert from_arrow.type == from_pandas.type
+        assert from_arrow.equals(from_pandas), method
+
+
 def test_udf_over_parquet(engine):
     # the UDF path over a real parquet scan at sf0.001
     sf = "/root/testdata/sf0.001"

@@ -79,7 +79,7 @@ def test_topk_no_global_sort(spark):
 @needs_data
 def test_udf_is_arrow_vectorized(spark):
     f = plan_facts(_rq("udf_pow")(spark, SF_SMOKE))
-    assert "ArrowEvalPython" in f.text  # pandas_udf path, not row-Python
+    assert "ArrowEvalPython" in f.text  # Arrow UDF path, not row-Python
     assert "BatchEvalPython" not in f.text
     assert f.read_schemas == ["struct<l_linenumber:int>"]
 

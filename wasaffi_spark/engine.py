@@ -158,7 +158,7 @@ class Engine:
         """≙ ``WasmFunctionFactory::create`` dispatch + registration
         (lib.rs:33-64 → RegisterFunction::Scalar at lib.rs:63)."""
         if not stmt.arg_types:
-            # a scalar pandas_udf needs at least one column; a zero-arg
+            # a scalar arrow_udf needs at least one column; a zero-arg
             # registration would die later with an opaque serializer
             # error — reject clearly at CREATE time instead.
             raise FunctionDefinitionError(

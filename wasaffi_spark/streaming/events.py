@@ -125,7 +125,7 @@ def stateful_user_stats(events: DataFrame, watermark: str = "2 hours") -> DataFr
 
     The update function is defined inline so cloudpickle ships it BY
     VALUE: executors do not need ``wasaffi_spark`` on their python path
-    (same cluster posture as the UDF runtime — see
+    (same cluster posture as the Arrow-native UDF runtime — see
     ``udf_runtime.build_pandas_udf``). State lives in the partitioned
     state store keyed by user_id; nothing accumulates on the driver.
     """

@@ -3,7 +3,10 @@
 This module is the Spark analog of the reference's host↔WASM invocation
 path (/root/reference/wasmedge_factory/src/udf.rs:82-115): Spark itself
 performs the Arrow IPC transfer, batching, and scalar→array broadcast that
-the reference hand-rolls (README.md:76); what remains here is
+the reference hand-rolls (README.md:76). Functions run as scalar
+``arrow_udf``s, so each batch's columns reach the guest as the
+``pa.Array``s Spark sent and the guest's ``pa.Array`` goes back as is,
+with no pandas conversion on either side. What remains here is
 
 - the per-worker-process module cache (≙ the factory's weak-valued VM
   cache, /root/reference/wasmedge_factory/src/lib.rs:79-100 — Python
@@ -31,10 +34,9 @@ import threading
 from collections.abc import Callable, Sequence
 from typing import Any
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
 from .errors import ModuleLoadError
@@ -129,10 +131,18 @@ def build_pandas_udf(
     arg_types: Sequence[T.DataType],
     return_type: T.DataType,
 ):
-    """Build the nondeterministic scalar ``pandas_udf`` wrapping a loaded
+    """Build the nondeterministic scalar ``arrow_udf`` wrapping a loaded
     function — the body of ``WasmFunctionWrapper::invoke``
     (/root/reference/wasmedge_factory/src/udf.rs:82-115) with Spark
     supplying IPC + batching.
+
+    The Arrow UDF contract is the guest's own, ``list[pa.Array] ->
+    pa.Array``: the arguments arrive as the batch's Arrow columns and the
+    result goes back as an Arrow array, so NaN stays NaN (a pandas hop
+    would read it as NULL) and no batch is converted to pandas. The name
+    predates the switch from ``pandas_udf`` and is kept because callers
+    import it. The wrapped function (``.func``) also accepts
+    ``pandas.Series`` arguments, which ``pa.array`` converts.
 
     ``.asNondeterministic()`` ≙ ``Volatility::Volatile`` (udf.rs:54):
     blocks constant folding / CSE so even literal-only calls execute at
@@ -158,7 +168,7 @@ def build_pandas_udf(
     # normal --py-files import is used instead.
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-    def _invoke(*cols: pd.Series) -> pd.Series:
+    def _invoke(*cols: pa.Array) -> pa.Array:
         import hashlib
         import importlib.util
         import os
@@ -221,8 +231,8 @@ def build_pandas_udf(
         # surface protocol-shaped, not as a raw ArrowInvalid.
         try:
             arrays = []
-            for s, at in zip(cols, arrow_arg_types):
-                arr = _pa.Array.from_pandas(s)
+            for col, at in zip(cols, arrow_arg_types):
+                arr = _pa.array(col)  # zero-copy for a pa.Array
                 if at is not None and arr.type != at:
                     arr = arr.cast(at)
                 arrays.append(arr)
@@ -246,15 +256,17 @@ def build_pandas_udf(
         # Result cast likewise: declared-return-type mismatch is part of
         # the invoke contract, not an anonymous Arrow error.
         try:
-            if not isinstance(result, (_pa.Array, _pa.ChunkedArray)):
+            if isinstance(result, _pa.ChunkedArray):
+                result = result.combine_chunks()
+            elif not isinstance(result, _pa.Array):
                 result = _pa.array(result)
             if result.type != arrow_ret:
                 result = result.cast(arrow_ret)
-            return result.to_pandas()
+            return result
         except Exception as e:
             raise RuntimeError(
                 f"[Wasm Invocation] result cast to declared return type failed: {e}"
             ) from e
 
-    udf = pandas_udf(_invoke, returnType=return_type)
+    udf = arrow_udf(_invoke, returnType=return_type)
     return udf.asNondeterministic()
