@@ -2,12 +2,17 @@
 # the Spark build: no compile step, so "all" is test; "wasm"-phase
 # equivalents are the oracle/bench harnesses.
 
-.PHONY: all test oracle bench example pipeline-example maintenance-example nightly-example smoke
+.PHONY: all test pins oracle bench example pipeline-example maintenance-example nightly-example smoke
 
 all: test
 
 test:
 	python -m pytest tests/ -q
+
+# the graph/IVF seam pins, including the ones marked slow (which the
+# default pytest run deselects)
+pins:
+	python -m pytest tests/test_r13_opt.py tests/test_r14_opt.py -q -m "slow or not slow"
 
 # replicate the driver's t2 correctness gate locally (DuckDB oracle)
 oracle:

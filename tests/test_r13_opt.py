@@ -4,9 +4,9 @@ replaces (the optimization never changes what a query computes).
 
 Covers:
 - similarity.ivf_postings_topk ≡ ivf_maintained_topk's search tail
-- knn_descent(ring_edges=prebuilt) ≡ knn_descent()
-- graph_search_topk(overlay=prebuilt) ≡ graph_search_topk()
-- graph_insert(overlay=prebuilt) ≡ graph_insert()
+- knn_descent / graph_search_topk / graph_insert over an IndexCorpus
+  slice whose ring overlay was built beforehand ≡ the plain-DataFrame
+  call
 - ivf_retrain_delta / ivf_retrained_topk with shared codebooks ≡ the
   per-leg retrain
 - graph.triangle_count materialized ≡ unmaterialized (pure lineage cut)
@@ -14,6 +14,8 @@ Covers:
 - similarity.top_pc_power: server-side-parsed expressions (oracle-
   pinned via pca_power/pca_outliers MATCH; spot-pinned here on the
   grid projection's exactness)
+- every graph operator over IndexCorpus slices (norm frame filtered
+  from the root's) ≡ the plain-DataFrame call
 """
 from __future__ import annotations
 
@@ -50,6 +52,18 @@ def _rows(df, cols=None):
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+
+@pytest.fixture(scope="module")
+def corpus(emb):
+    """Slices of ONE IndexCorpus matching the ``split`` frames."""
+    c = similarity.IndexCorpus(emb)
+    base = c.where(F.col("vec_id") % IAP_MOD != IAP_MOD - 1)
+    batch = c.where(F.col("vec_id") % IAP_MOD == IAP_MOD - 1)
+    dele = c.where(F.pmod(F.col("vec_id"), F.lit(IMS_DEL_MOD)) == IMS_DEL_RES)
+    alive = (base | batch) - dele
+    queries = alive.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
+    return base, batch, dele, queries
 
 
 @pytest.fixture(scope="module")
@@ -98,31 +112,33 @@ def test_knn_descent_with_prebuilt_ring(emb, split):
         base, k=DESCENT_K, rounds=1, max_reverse=DESCENT_MAX_REVERSE,
         ring=DESCENT_RING,
     )
-    ringe, _ = similarity.ring_overlay(base, n_entry=0, ring=DESCENT_RING)
+    c = similarity.IndexCorpus(base)
+    ringe, _ = c.overlay(n_entry=0, ring=DESCENT_RING)
     pre = similarity.knn_descent(
-        base, k=DESCENT_K, rounds=1, max_reverse=DESCENT_MAX_REVERSE,
-        ring=DESCENT_RING, ring_edges=ringe,
+        c, k=DESCENT_K, rounds=1, max_reverse=DESCENT_MAX_REVERSE,
+        ring=DESCENT_RING,
     )
     assert _rows(pre) == _rows(plain)
+    # the build read the prebuilt overlay, not a second one
+    assert c.overlay(n_entry=0, ring=DESCENT_RING)[0] is ringe
 
 
 @pytest.mark.slow
-def test_graph_search_and_insert_with_overlay(emb, split):
+def test_graph_search_and_insert_with_overlay(emb, split, corpus):
     base, batch, _dele, queries = split
+    cbase, cbatch, _cdele, cqueries = corpus
     graph = similarity.knn_descent(
         base, k=DESCENT_K, rounds=1, max_reverse=DESCENT_MAX_REVERSE,
         ring=DESCENT_RING,
     ).localCheckpoint(eager=True)
-    ringe, entries = similarity.ring_overlay(
-        base, n_entry=GS_ENTRY, ring=GS_RING
-    )
+    cbase.overlay(n_entry=GS_ENTRY, ring=GS_RING)
     plain_search = similarity.graph_search_topk(
         queries, graph, base, k=GS_K, beam=GS_BEAM, rounds=2,
         n_entry=GS_ENTRY, ring=GS_RING,
     )
     pre_search = similarity.graph_search_topk(
-        queries, graph, base, k=GS_K, beam=GS_BEAM, rounds=2,
-        n_entry=GS_ENTRY, ring=GS_RING, overlay=(ringe, entries),
+        cqueries, graph, cbase, k=GS_K, beam=GS_BEAM, rounds=2,
+        n_entry=GS_ENTRY, ring=GS_RING,
     )
     assert _rows(pre_search) == _rows(plain_search)
 
@@ -131,9 +147,8 @@ def test_graph_search_and_insert_with_overlay(emb, split):
         n_entry=GS_ENTRY, ring=GS_RING, max_reverse=DESCENT_MAX_REVERSE,
     )
     pre_ins = similarity.graph_insert(
-        batch, graph, base, k=DESCENT_K, beam=GS_BEAM, rounds=2,
+        cbatch, graph, cbase, k=DESCENT_K, beam=GS_BEAM, rounds=2,
         n_entry=GS_ENTRY, ring=GS_RING, max_reverse=DESCENT_MAX_REVERSE,
-        overlay=(ringe, entries),
     )
     assert _rows(pre_ins) == _rows(plain_ins)
 
@@ -252,81 +267,67 @@ def test_cluster_safe_split_shared_components(spark):
 
 
 @pytest.mark.slow
-def test_norm_frame_seams_row_identical(emb, split):
-    """Batch-4 pins: every ``vnorm``/``qnorm``/``cnorm`` norm_frame
-    seam (and the knn_edges_bucketed vnorm path + graph_search_topk's
-    ``_materialize_final`` skip) is row-identical to the straight-line
-    form it replaces."""
+def test_norm_frame_seams_row_identical(emb, split, corpus):
+    """Every graph operator reading an IndexCorpus slice's norm frame
+    (the root's, filtered) — and graph_search_topk's
+    ``_materialize_final`` skip — is row-identical to the plain-
+    DataFrame call that builds its own."""
     base, batch, dele, queries = split
-    nf = similarity.norm_frame(emb)
-    base_nf = nf.where(F.col("_vid") % IAP_MOD != IAP_MOD - 1)
-    batch_nf = nf.where(F.col("_vid") % IAP_MOD == IAP_MOD - 1)
+    cbase, _cbatch, cdele, cqueries = corpus
 
-    # knn_edges_bucketed: vnorm-backed cells ≡ inline cells (incl. the
-    # auto-bits count over the prebuilt frame)
+    # knn_edges_bucketed: slice-backed cells ≡ inline cells (incl. the
+    # auto-bits count over the slice)
     plain_edges = similarity.knn_edges_bucketed(base, k=2)
-    pre_edges = similarity.knn_edges_bucketed(base, k=2, vnorm=base_nf)
+    pre_edges = similarity.knn_edges_bucketed(cbase, k=2)
     assert _rows(pre_edges) == _rows(plain_edges)
 
-    # knn_descent: prebuilt vnorm ≡ per-call build
+    # knn_descent: slice ≡ per-call build
     plain_g = similarity.knn_descent(
         base, k=DESCENT_K, rounds=1, max_reverse=DESCENT_MAX_REVERSE,
         ring=DESCENT_RING,
     )
     pre_g = similarity.knn_descent(
-        base, k=DESCENT_K, rounds=1, max_reverse=DESCENT_MAX_REVERSE,
-        ring=DESCENT_RING, vnorm=base_nf,
+        cbase, k=DESCENT_K, rounds=1, max_reverse=DESCENT_MAX_REVERSE,
+        ring=DESCENT_RING,
     )
     assert _rows(pre_g) == _rows(plain_g)
     graph = pre_g.localCheckpoint(eager=True)
 
-    # graph_search_topk: qnorm/cnorm seams + final-checkpoint skip
-    q_nf = nf.where(
-        (F.col("_vid") < ANN_QUERY_MAX_ID)
-        & (F.pmod(F.col("_vid"), F.lit(IMS_DEL_MOD)) != IMS_DEL_RES)
-    )
+    # graph_search_topk: query/corpus slices + final-checkpoint skip
     plain_s = similarity.graph_search_topk(
         queries, graph, base, k=GS_K, beam=GS_BEAM, rounds=2,
         n_entry=GS_ENTRY, ring=GS_RING,
     )
     pre_s = similarity.graph_search_topk(
-        queries, graph, base, k=GS_K, beam=GS_BEAM, rounds=2,
-        n_entry=GS_ENTRY, ring=GS_RING, qnorm=q_nf, cnorm=base_nf,
-        _materialize_final=False,
+        cqueries, graph, cbase, k=GS_K, beam=GS_BEAM, rounds=2,
+        n_entry=GS_ENTRY, ring=GS_RING, _materialize_final=False,
     )
     assert _rows(pre_s) == _rows(plain_s)
 
-    # graph_delete: prebuilt vnorm ≡ lazy per-call projection
+    # graph_delete: cached slice norm ≡ lazy per-call projection
     plain_d = similarity.graph_delete(dele, graph, base, k=DESCENT_K)
-    pre_d = similarity.graph_delete(
-        dele, graph, base, k=DESCENT_K, vnorm=base_nf
-    )
+    pre_d = similarity.graph_delete(cdele, graph, cbase, k=DESCENT_K)
     assert _rows(pre_d) == _rows(plain_d)
 
-    # graph_refresh: prebuilt vnorm ≡ per-call build
+    # graph_refresh: slice ≡ per-call build
     plain_r = similarity.graph_refresh(
         graph, base, k=DESCENT_K, rounds=1,
         max_reverse=DESCENT_MAX_REVERSE,
     )
     pre_r = similarity.graph_refresh(
-        graph, base, k=DESCENT_K, rounds=1,
-        max_reverse=DESCENT_MAX_REVERSE, vnorm=base_nf,
+        graph, cbase, k=DESCENT_K, rounds=1,
+        max_reverse=DESCENT_MAX_REVERSE,
     )
     assert _rows(pre_r) == _rows(plain_r)
 
 
 @pytest.mark.slow
-def test_graph_maintained_search_norm_seams(emb, split):
-    """graph_maintained_search with every per-side norm seam (and the
+def test_graph_maintained_search_norm_seams(emb, split, corpus):
+    """graph_maintained_search over IndexCorpus slices (every side a
+    filter of one norm frame, the alive overlay built beforehand, the
     overlapped CRUD/prep threads) ≡ the straight-line composition."""
     base, batch, dele, queries = split
-    nf = similarity.norm_frame(emb)
-    base_nf = nf.where(F.col("_vid") % IAP_MOD != IAP_MOD - 1)
-    batch_nf = nf.where(F.col("_vid") % IAP_MOD == IAP_MOD - 1)
-    alive_nf = nf.where(
-        F.pmod(F.col("_vid"), F.lit(IMS_DEL_MOD)) != IMS_DEL_RES
-    )
-    q_nf = alive_nf.where(F.col("_vid") < ANN_QUERY_MAX_ID)
+    cbase, cbatch, cdele, cqueries = corpus
     graph = similarity.knn_descent(
         base, k=DESCENT_K, rounds=1, max_reverse=DESCENT_MAX_REVERSE,
         ring=DESCENT_RING,
@@ -336,21 +337,11 @@ def test_graph_maintained_search_norm_seams(emb, split):
         beam=GS_BEAM, rounds=2, n_entry=GS_ENTRY, ring=GS_RING,
         max_reverse=DESCENT_MAX_REVERSE,
     )
-    alive0 = emb.join(
-        emb.where(
-            F.pmod(F.col("vec_id"), F.lit(IMS_DEL_MOD)) == IMS_DEL_RES
-        ).select(F.col("vec_id").alias("_did")),
-        F.col("vec_id") == F.col("_did"),
-        "left_anti",
-    )
+    ((cbase | cbatch) - cdele).overlay(n_entry=GS_ENTRY, ring=GS_RING)
     pre = similarity.graph_maintained_search(
-        queries, graph, base, batch, dele, k=GS_K, k_graph=DESCENT_K,
+        cqueries, graph, cbase, cbatch, cdele, k=GS_K, k_graph=DESCENT_K,
         beam=GS_BEAM, rounds=2, n_entry=GS_ENTRY, ring=GS_RING,
-        max_reverse=DESCENT_MAX_REVERSE, base_norm=base_nf,
-        batch_norm=batch_nf, alive_norm=alive_nf, qnorm=q_nf,
-        alive_overlay=similarity.ring_overlay(
-            alive0, n_entry=GS_ENTRY, ring=GS_RING
-        ),
+        max_reverse=DESCENT_MAX_REVERSE,
     )
     assert _rows(pre) == _rows(plain)
 

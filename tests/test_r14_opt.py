@@ -63,19 +63,28 @@ def test_semantic_dedup_knob_fold_row_identical(emb):
 
 def test_knn_descent_overlay_total_bits_row_identical(emb):
     """knn_descent deriving the auto-bits knob from the ring overlay's
-    row total (r14) ≡ the explicit-bits straight line ≡ the prebuilt-
-    ring path that still pays the vnorm count."""
+    row total (r14) ≡ the explicit-bits straight line ≡ the IndexCorpus
+    path whose count comes from a prebuilt overlay, at the descent's
+    own target_cell_size."""
     n = emb.count()
     bits = similarity.auto_sign_bits(n, 32)
     auto = similarity.knn_descent(emb, k=4, rounds=1, ring=2)
     explicit = similarity.knn_descent(emb, k=4, rounds=1, ring=2, bits=bits)
     assert _rows(auto) == _rows(explicit)
-    ringe, _e, total = similarity.ring_overlay(
-        emb, n_entry=0, ring=2, with_total=True
-    )
-    assert total == n
-    pre = similarity.knn_descent(emb, k=4, rounds=1, ring=2, ring_edges=ringe)
+    c = similarity.IndexCorpus(emb)
+    c.overlay(n_entry=0, ring=2)
+    assert c.count() == n
+    pre = similarity.knn_descent(c, k=4, rounds=1, ring=2)
     assert _rows(pre) == _rows(auto)
+    # bits follow the call's target_cell_size, not a fixed 32
+    small = similarity.knn_descent(
+        c, k=4, rounds=0, ring=2, target_cell_size=8
+    )
+    small_explicit = similarity.knn_descent(
+        emb, k=4, rounds=0, ring=2,
+        bits=similarity.auto_sign_bits(n, 8),
+    )
+    assert _rows(small) == _rows(small_explicit)
 
 
 @pytest.mark.slow
@@ -119,28 +128,14 @@ def test_ivf_recall_monitor_truth_overlap_row_identical(spark):
 @pytest.mark.slow
 def test_graph_recall_monitor_truth_overlap_row_identical(spark):
     """The r14 overlapped-truth builder ≡ a serial gauge over the same
-    maintained chain (truth computed lazily from the chain's frames)."""
+    maintained chain (truth computed lazily from raw-table frames)."""
     new = catalog.q_graph_recall_monitor(spark, SF_DIR)
-    emb, base, batch, nf, base_nf, batch_nf, b_ringe, b_entries, dbits = (
-        catalog._graph_family_prologue(spark, SF_DIR)
-    )
-    graph = similarity.knn_descent(
-        base, k=catalog.DESCENT_K, rounds=catalog.DESCENT_ROUNDS,
-        max_reverse=catalog.DESCENT_MAX_REVERSE, ring=catalog.DESCENT_RING,
-        ring_edges=b_ringe, vnorm=base_nf,
-    )
-    dele, queries, alive_nf, q_nf = catalog._gms_slices(emb, nf)
-    got = similarity.graph_maintained_search(
-        queries, graph, base, batch, dele, k=catalog.GS_K,
-        k_graph=catalog.DESCENT_K, beam=catalog.GS_BEAM,
-        rounds=catalog.GS_ROUNDS, n_entry=catalog.GS_ENTRY,
-        ring=catalog.GS_RING, max_reverse=catalog.DESCENT_MAX_REVERSE,
-        base_overlay=(b_ringe, b_entries), base_norm=base_nf,
-        batch_norm=batch_nf, alive_norm=alive_nf, qnorm=q_nf,
-    )
-    d = dele.withColumnRenamed("vec_id", "_did")
+    emb = catalog._table(spark, SF_DIR, "embeddings")
+    base, batch, dele, _alive, queries = catalog._maintenance_corpus(emb)
+    got = catalog._maintained_search(base, batch, dele, queries)
+    d = dele.df.select(F.col("vec_id").alias("_did"))
     alive = emb.join(d, F.col("vec_id") == F.col("_did"), "left_anti")
-    truth = similarity.brute_force_topk(queries, alive, k=catalog.GS_K)
+    truth = similarity.brute_force_topk(queries.df, alive, k=catalog.GS_K)
     old = (
         similarity.recall_at_k(got, truth)
         .select(

@@ -402,6 +402,21 @@ def test_train_classifier_bias_learns_base_rate(spark):
     assert w[-1] > 0
 
 
+def test_train_classifier_rejects_duplicate_ids(spark):
+    """A repeated doc id would fan the bias lane out through the labels
+    join and inflate N; training refuses it instead."""
+    from wasaffi_spark.operators.training import train_linear_classifier
+
+    docs = _labeled_corpus(spark).unionByName(
+        spark.createDataFrame(
+            [(2, "clean science text", 1)],
+            "doc_id bigint, text string, label int",
+        )
+    )
+    with pytest.raises(ValueError, match="not unique"):
+        train_linear_classifier(docs, "label")
+
+
 # ---------------------------------------------------------------------------
 # boilerplate removal
 

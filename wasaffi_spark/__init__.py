@@ -14,7 +14,7 @@ from .errors import (
     WasmInvocationError,
     WasmInvocationPanic,
 )
-from .factory import FunctionSpec, PythonModuleFunctionFactory, WasmFunctionFactory
+from .factory import FunctionSpec, PythonModuleFunctionFactory
 from .registry import FunctionRegistry
 
 __version__ = "0.1.0"
@@ -28,7 +28,6 @@ __all__ = [
     "FunctionRegistry",
     "FunctionSpec",
     "PythonModuleFunctionFactory",
-    "WasmFunctionFactory",
     "WasmFunctionError",
     "FunctionDefinitionError",
     "ModuleLoadError",

@@ -7,15 +7,13 @@ into a *function spec* — enough information to (a) validate the definition
 at the driver and (b) lazily load + call the function inside executor
 Python workers.
 
-Two backends (SURVEY §7.0):
-
-- :class:`PythonModuleFunctionFactory` — ``'path/mod.py!fn'``; dynamic
-  import, the native analog of "load external module, bind exported
-  symbol" (lib.rs:111-132).
-- :class:`WasmFunctionFactory` — ``'path/mod.wasm!fn'``; real WASM via
-  wasmtime speaking the reference's Arrow-IPC bytes-in/bytes-out ABI
-  (/root/reference/wasm_udf/src/lib.rs:51-67). Optional: gated on
-  wasmtime being importable.
+One factory serves both backends (SURVEY §7.0):
+:class:`PythonModuleFunctionFactory` resolves ``'path/mod.py!fn'`` by
+dynamic import, the native analog of "load external module, bind
+exported symbol" (lib.rs:111-132), and ``'path/mod.wasm!fn'`` through
+``udf_runtime``'s loader, which runs the module with wasmtime when it
+is importable and with the bundled pure-Python interpreter
+(``wasm_interp``) otherwise (see ``wasm_backend.WasmModule``).
 """
 
 from __future__ import annotations
@@ -24,7 +22,6 @@ from dataclasses import dataclass
 from typing import Protocol
 
 from .ddl import CreateFunctionStmt, split_definition
-from .errors import ModuleLoadError
 from .udf_runtime import get_function, resolve_module_path
 
 
@@ -51,7 +48,8 @@ class FunctionFactory(Protocol):
 
 
 class PythonModuleFunctionFactory:
-    """Loads scalar functions from Python modules.
+    """Loads scalar functions from Python modules (``'mod.py!fn'``) and
+    WASM modules (``'mod.wasm!fn'``).
 
     The loaded symbol must follow the guest calling convention
     ``list[pyarrow.Array] -> pyarrow.Array`` (≙ ``fn(&[ArrayRef]) ->
@@ -67,33 +65,5 @@ class PythonModuleFunctionFactory:
         resolved = resolve_module_path(module, self._roots)
         # Driver-side validation: load once and check the symbol exists
         # (the executor re-loads lazily into its own process cache).
-        get_function(resolved, method)
-        return FunctionSpec(stmt.name, resolved, method, stmt)
-
-
-class WasmFunctionFactory:
-    """Real-WASM backend (``'module.wasm!fn'``) via wasmtime.
-
-    Byte-level parity with the reference ABI: the guest exports
-    ``__wasm_udf_<fn>`` taking an Arrow IPC stream of the packed argument
-    batch and returning an IPC stream of a single-column result batch
-    (/root/reference/wasmedge_factory/src/udf.rs:82-115,
-    /root/reference/wasm_udf/src/lib.rs:31-43,51-67).
-    """
-
-    def __init__(self, roots: tuple[str, ...] = ()):
-        self._roots = tuple(roots)
-
-    def create(self, stmt: CreateFunctionStmt) -> FunctionSpec:
-        try:
-            import wasmtime  # noqa: F401
-        except ImportError as e:
-            raise ModuleLoadError(
-                "the wasm backend requires the 'wasmtime' package, which is "
-                "not installed in this environment; use the Python-module "
-                "backend ('module.py!fn') instead"
-            ) from e
-        module, method = split_definition(stmt.definition)
-        resolved = resolve_module_path(module, self._roots)
         get_function(resolved, method)
         return FunctionSpec(stmt.name, resolved, method, stmt)

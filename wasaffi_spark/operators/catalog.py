@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import dedup, multimodal, similarity, text
+from .overlap import overlap
 from .dedup import BANDS, NUM_PERM, ROWS_PER_BAND, SHINGLE_K, SIMHASH_HEX_DIGITS
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -7430,6 +7431,15 @@ GS_ENTRY = 4
 assert GS_RING == DESCENT_RING
 
 
+def _descent(corpus: similarity.IndexCorpus) -> DataFrame:
+    """The graph family's NN-descent build at the knn_descent
+    operating point."""
+    return similarity.knn_descent(
+        corpus, k=DESCENT_K, rounds=DESCENT_ROUNDS,
+        max_reverse=DESCENT_MAX_REVERSE, ring=DESCENT_RING,
+    )
+
+
 def q_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-ANN search (operators/similarity.py::graph_search_topk):
     build the NN-descent graph (same operating point as knn_descent),
@@ -7443,22 +7453,17 @@ def q_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the property that makes graph ANN the high-recall scale path.
     The oracle replays the graph build (shared _DESCENT_GRAPH_CTES)
     and every beam round as unrolled CTEs."""
-    emb = _table(spark, sf_dir, "embeddings")
-    # r13: ONE corpus materialization (norm_frame) shared by the
-    # descent build's seed/rounds and the search's corpus+query sides
-    nf = similarity.norm_frame(emb)
-    graph = similarity.knn_descent(
-        emb, k=DESCENT_K, rounds=DESCENT_ROUNDS,
-        max_reverse=DESCENT_MAX_REVERSE, ring=DESCENT_RING, vnorm=nf,
-    )
-    queries = emb.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
+    # r13: ONE corpus (IndexCorpus) shared by the descent build and
+    # the search: one norm frame for the build's seed/rounds and the
+    # search's corpus+query sides, and one ring overlay for the build's
+    # seed and the search's edges (DESCENT_RING == GS_RING, same seed)
+    corpus = similarity.IndexCorpus(_table(spark, sf_dir, "embeddings"))
     # _materialize_final=False: the sink reads the result once (r13
     # batch 7 — the graph_insert fold, applied at the declared sink)
     out = similarity.graph_search_topk(
-        queries, graph, emb, k=GS_K, beam=GS_BEAM, rounds=GS_ROUNDS,
-        n_entry=GS_ENTRY, ring=GS_RING, cnorm=nf,
-        qnorm=nf.where(F.col("_vid") < ANN_QUERY_MAX_ID),
-        _materialize_final=False,
+        corpus.where(F.col("vec_id") < ANN_QUERY_MAX_ID), _descent(corpus),
+        corpus, k=GS_K, beam=GS_BEAM, rounds=GS_ROUNDS, n_entry=GS_ENTRY,
+        ring=GS_RING, _materialize_final=False,
     )
     return out.select(
         "qid", "nid", "cos_sim", F.col("rank").cast("bigint").alias("rnk")
@@ -7560,25 +7565,18 @@ def q_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|batch|·beam·(k+ring)·rounds) + one bounded splice join —
     independent of base size post-build. Insert≡rebuild pinned by
     pytest on the orthogonal-cluster fixture (incl. eviction)."""
-    # r13: ONE corpus materialization (norm_frame over emb) backs the
-    # descent seed/rounds AND the insert search's query/corpus sides
-    # (filter-derived slices of the cached rows); the base hash-ring is
-    # likewise shared by the build and the insert's search
-    # (DESCENT_RING == GS_RING, same seed) — build once, pin, pass to
-    # both (row-identical; ring_overlay). The two materializations are
-    # independent → overlapped (guide §2.6; _graph_family_prologue).
-    emb, base, batch, nf, base_nf, batch_nf, b_ringe, b_entries, dbits = (
-        _graph_family_prologue(spark, sf_dir)
-    )
-    graph = similarity.knn_descent(
-        base, k=DESCENT_K, rounds=DESCENT_ROUNDS,
-        max_reverse=DESCENT_MAX_REVERSE, ring=DESCENT_RING,
-        ring_edges=b_ringe, vnorm=base_nf, bits=dbits,
+    # r13: ONE corpus (IndexCorpus over emb) backs the descent
+    # seed/rounds AND the insert search's query/corpus sides (slices
+    # filter its one norm frame); the base hash-ring is likewise shared
+    # by the build and the insert's search (DESCENT_RING == GS_RING,
+    # same seed)
+    base, batch, _dele, _alive, _q = _maintenance_corpus(
+        _table(spark, sf_dir, "embeddings")
     )
     out = similarity.graph_insert(
-        batch, graph, base, k=DESCENT_K, beam=GS_BEAM, rounds=GS_ROUNDS,
-        n_entry=GS_ENTRY, ring=GS_RING, max_reverse=DESCENT_MAX_REVERSE,
-        overlay=(b_ringe, b_entries), qnorm=batch_nf, cnorm=base_nf,
+        batch, _descent(base), base, k=DESCENT_K, beam=GS_BEAM,
+        rounds=GS_ROUNDS, n_entry=GS_ENTRY, ring=GS_RING,
+        max_reverse=DESCENT_MAX_REVERSE,
     )
     return out.select(
         "src", "dst", "cos_sim", F.col("rank").cast("bigint").alias("rnk")
@@ -7648,16 +7646,13 @@ def q_graph_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     node — surviving edges ∪ scored bridge candidates (the deleted
     node's out-neighbours), re-ranked under the shared contract.
     Repair work ∝ edges-into-deleted × k, never the whole graph."""
-    emb = _table(spark, sf_dir, "embeddings")
-    # r13: one corpus materialization shared by the build and the
-    # repair scoring (norm_frame seam, row-identical)
-    nf = similarity.norm_frame(emb)
-    graph = similarity.knn_descent(
-        emb, k=DESCENT_K, rounds=DESCENT_ROUNDS,
-        max_reverse=DESCENT_MAX_REVERSE, ring=DESCENT_RING, vnorm=nf,
+    # r13: one corpus norm frame shared by the build and the repair
+    # scoring (IndexCorpus, row-identical)
+    corpus = similarity.IndexCorpus(_table(spark, sf_dir, "embeddings"))
+    dele = corpus.where(F.col("vec_id") % GDEL_MOD == 3)
+    out = similarity.graph_delete(
+        dele, _descent(corpus), corpus, k=DESCENT_K
     )
-    dele = emb.where(F.col("vec_id") % GDEL_MOD == 3).select("vec_id")
-    out = similarity.graph_delete(dele, graph, emb, k=DESCENT_K, vnorm=nf)
     return out.select(
         "src", "dst", "cos_sim", F.col("rank").cast("bigint").alias("rnk")
     ).orderBy("src", "rnk")
@@ -7720,54 +7715,36 @@ GMS_DEL_RES = 4   # BOTH base nodes and just-inserted batch nodes —
 # the FreshDiskANN interleaving the composition exists to exercise.
 
 
-def _graph_family_prologue(spark: SparkSession, sf_dir: str):
-    """The shared prologue of every graph-family builder (r13, guide
-    §1.2 step 1 + §2.6): the IAP_MOD base/batch split of the embeddings
-    table, ONE materialized norm_frame over the full corpus (its
-    base/batch slices derive by the same filters — every downstream
-    stage reads cached rows instead of re-materializing the corpus),
-    and the shared base ring overlay — the norm_frame and overlay
-    materializations are independent and run overlapped. Returns
-    ``(emb, base, batch, nf, base_nf, batch_nf, b_ringe, b_entries,
-    dbits)``; all row-identical to the per-builder constructions they
-    replace. ``dbits`` (r14): the descent build's auto-bits knob,
-    derived from the overlay ranking's exact base row count instead of
-    a separate O(N) count job inside ``knn_edges_bucketed`` — the same
-    ``auto_sign_bits(|base|, 32)`` value by construction, so every
-    cell and edge is identical."""
-    emb = _table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % IAP_MOD != IAP_MOD - 1)
-    batch = emb.where(F.col("vec_id") % IAP_MOD == IAP_MOD - 1)
-    (nf,), (b_ringe, b_entries, n_base) = similarity._overlap(
-        lambda: (similarity.norm_frame(emb),),
-        lambda: similarity.ring_overlay(
-            base, n_entry=GS_ENTRY, ring=GS_RING, with_total=True
-        ),
-    )
-    b_ringe = b_ringe.localCheckpoint(eager=True)
-    base_nf = nf.where(F.col("_vid") % IAP_MOD != IAP_MOD - 1)
-    batch_nf = nf.where(F.col("_vid") % IAP_MOD == IAP_MOD - 1)
-    # knn_descent's default target_cell_size (the value the dropped
-    # count job would have fed)
-    dbits = similarity.auto_sign_bits(n_base, 32)
-    return emb, base, batch, nf, base_nf, batch_nf, b_ringe, b_entries, dbits
-
-
-def _gms_slices(emb, nf):
-    """The maintained-search chain's delete/query slices and their
-    norm_frame-derived sides (r13; row-identical filters)."""
-    dele = emb.where(
+def _maintenance_corpus(emb: DataFrame):
+    """The graph maintenance builders' ONE :class:`similarity.IndexCorpus`
+    over the embeddings table, as its slices ``(base, batch, dele,
+    alive, queries)``: the IAP_MOD base/batch split, the GMS delete
+    slice, the alive corpus ``(base | batch) - dele`` (the slice
+    graph_maintained_search derives) and the alive probe queries. Every
+    operator over them shares one norm frame, and one ring overlay and
+    row count per slice (r13/r14; row-identical — each slice is a
+    filter of the same rows the straight-line builders read)."""
+    corpus = similarity.IndexCorpus(emb)
+    base = corpus.where(F.col("vec_id") % IAP_MOD != IAP_MOD - 1)
+    batch = corpus.where(F.col("vec_id") % IAP_MOD == IAP_MOD - 1)
+    dele = corpus.where(
         F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) == GMS_DEL_RES
-    ).select("vec_id")
-    queries = emb.where(
-        (F.col("vec_id") < ANN_QUERY_MAX_ID)
-        & (F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) != GMS_DEL_RES)
     )
-    alive_nf = nf.where(
-        F.pmod(F.col("_vid"), F.lit(GMS_DEL_MOD)) != GMS_DEL_RES
+    alive = (base | batch) - dele
+    queries = alive.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
+    return base, batch, dele, alive, queries
+
+
+def _maintained_search(base, batch, dele, queries) -> DataFrame:
+    """Descent build over ``base``, then the maintained-index search.
+    _materialize_final=False: every caller reads the result exactly
+    once (r13 batch 7, row-identical)."""
+    return similarity.graph_maintained_search(
+        queries, _descent(base), base, batch, dele, k=GS_K,
+        k_graph=DESCENT_K, beam=GS_BEAM, rounds=GS_ROUNDS, n_entry=GS_ENTRY,
+        ring=GS_RING, max_reverse=DESCENT_MAX_REVERSE,
+        _materialize_final=False,
     )
-    q_nf = alive_nf.where(F.col("_vid") < ANN_QUERY_MAX_ID)
-    return dele, queries, alive_nf, q_nf
 
 
 def q_graph_maintained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7781,46 +7758,17 @@ def q_graph_maintained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed over the ALIVE corpus. Every stage is an
     already-attested operator; the oracle replays the whole chain from
     the shared CTE builders."""
+    base, batch, dele, alive, queries = _maintenance_corpus(
+        _table(spark, sf_dir, "embeddings")
+    )
     # r13: the alive-corpus ring overlay depends only on (emb, the GMS
-    # delete slice) — start it on a driver thread BEFORE the descent
-    # build so it overlaps the whole build+CRUD chain (guide §2.6),
-    # then hand it to the final search via the alive_overlay seam
-    from concurrent.futures import ThreadPoolExecutor
-
-    emb0 = _table(spark, sf_dir, "embeddings")
-    alive0 = emb0.join(
-        emb0.where(
-            F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) == GMS_DEL_RES
-        ).select(F.col("vec_id").alias("_did")),
-        F.col("vec_id") == F.col("_did"),
-        "left_anti",
+    # delete slice) — start it together with the descent build so it
+    # overlaps the whole build+CRUD chain (guide §2.6); the final
+    # search picks it up from the alive slice
+    out, _ = overlap(
+        lambda: _maintained_search(base, batch, dele, queries),
+        lambda: alive.overlay(GS_ENTRY, GS_RING),
     )
-    _pool = ThreadPoolExecutor(max_workers=1)
-    _ov_fut = _pool.submit(
-        similarity.ring_overlay, alive0, GS_ENTRY, GS_RING
-    )
-    try:
-        emb, base, batch, nf, base_nf, batch_nf, b_ringe, b_entries, dbits = (
-            _graph_family_prologue(spark, sf_dir)
-        )
-        graph = similarity.knn_descent(
-            base, k=DESCENT_K, rounds=DESCENT_ROUNDS,
-            max_reverse=DESCENT_MAX_REVERSE, ring=DESCENT_RING,
-            ring_edges=b_ringe, vnorm=base_nf, bits=dbits,
-        )
-        dele, queries, alive_nf, q_nf = _gms_slices(emb, nf)
-        # _materialize_final=False: the sink reads the result exactly
-        # once (r13 batch 7, row-identical)
-        out = similarity.graph_maintained_search(
-            queries, graph, base, batch, dele, k=GS_K, k_graph=DESCENT_K,
-            beam=GS_BEAM, rounds=GS_ROUNDS, n_entry=GS_ENTRY, ring=GS_RING,
-            max_reverse=DESCENT_MAX_REVERSE,
-            base_overlay=(b_ringe, b_entries), base_norm=base_nf,
-            batch_norm=batch_nf, alive_norm=alive_nf, qnorm=q_nf,
-            alive_overlay=_ov_fut.result(), _materialize_final=False,
-        )
-    finally:
-        _pool.shutdown(wait=False)
     return out.select(
         "qid", "nid", "cos_sim", F.col("rank").cast("bigint").alias("rnk")
     ).orderBy("qid", "rnk")
@@ -8820,16 +8768,13 @@ def q_tokenizer_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.6): the two tokenizer trainings are INDEPENDENT
     # driver-sequential chains of small jobs (the unigram hard-EM's
     # per-iteration vocab collects vs the BPE merge loop) that only
-    # meet at the comparison join — run them on two driver threads so
-    # one trainer's jobs back-fill the other's idle cores. Pure
+    # meet at the comparison join — run them side by side so one
+    # trainer's jobs back-fill the other's idle cores. Pure
     # concurrency; both trainings are deterministic and row-identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fu = pool.submit(unigram.unigram_train, docs)
-        fb = pool.submit(bpe.bpe_train, docs, k_merges=BPE_K)
-        uvoc = fu.result()
-        merges = fb.result()
+    uvoc, merges = overlap(
+        lambda: unigram.unigram_train(docs),
+        lambda: bpe.bpe_train(docs, k_merges=BPE_K),
+    )
     g_arr = F.array(*[F.lit(g) for g in unigram.log_gains()])
     vg = uvoc.withColumn(
         "g", F.element_at(g_arr, F.col("p_q").cast("int")).cast("long")
@@ -9299,42 +9244,49 @@ register_extra(
 GREF_ROUNDS = 1
 
 
-def _maintained_graph_chain(spark: SparkSession, sf_dir: str):
+def _maintained_graph_chain(base, batch, dele) -> DataFrame:
     """The shared CRUD chain of the graph_refresh / policy / drift
     builders (r13 refactor — one definition of the identical chain
     these builders each spelled out): descent build over the base
     slice → insert the batch → delete the GMS slice with repair → the
-    maintained adjacency ``g2``, all over the ONE
-    ``_graph_family_prologue`` materialization. Returns ``(emb, nf,
-    dele, d, g2, alive, alive_nf, queries, q_nf)`` — row-identical to
-    the inlined chains it replaces."""
-    emb, base, batch, nf, base_nf, batch_nf, b_ringe, b_entries, dbits = (
-        _graph_family_prologue(spark, sf_dir)
-    )
-    graph = similarity.knn_descent(
-        base, k=DESCENT_K, rounds=DESCENT_ROUNDS,
-        max_reverse=DESCENT_MAX_REVERSE, ring=DESCENT_RING,
-        ring_edges=b_ringe, vnorm=base_nf, bits=dbits,
-    )
-    dele, queries, alive_nf, q_nf = _gms_slices(emb, nf)
+    maintained adjacency ``g2``, all over the slices of ONE
+    :func:`_maintenance_corpus`."""
+    graph = _descent(base)
     ins = similarity.graph_insert(
         batch, graph, base, k=DESCENT_K, beam=GS_BEAM, rounds=GS_ROUNDS,
         n_entry=GS_ENTRY, ring=GS_RING, max_reverse=DESCENT_MAX_REVERSE,
-        overlay=(b_ringe, b_entries), qnorm=batch_nf, cnorm=base_nf,
     )
     g1 = similarity.graph_apply_delta(graph, ins).localCheckpoint(
         eager=True
     )
-    corpus = emb.select("vec_id", "embedding")
-    rep = similarity.graph_delete(dele, g1, corpus, k=DESCENT_K, vnorm=nf)
-    d = dele.withColumnRenamed("vec_id", "_did")
-    g2 = (
+    rep = similarity.graph_delete(dele, g1, base | batch, k=DESCENT_K)
+    d = dele.df.select(F.col("vec_id").alias("_did"))
+    return (
         similarity.graph_apply_delta(g1, rep)
         .join(d, F.col("src") == F.col("_did"), "left_anti")
         .localCheckpoint(eager=True)
     )
-    alive = emb.join(d, F.col("vec_id") == F.col("_did"), "left_anti")
-    return emb, nf, dele, d, g2, alive, alive_nf, queries, q_nf
+
+
+def _truth(queries: DataFrame, alive: DataFrame, k: int) -> DataFrame:
+    """A recall gauge's exact top-``k`` truth set, materialized."""
+    return similarity.brute_force_topk(queries, alive, k=k).localCheckpoint(
+        eager=True
+    )
+
+
+def _gauge_prep(alive, queries, chain):
+    """``(chain(), truth)``: the recall gauges' O(Q·N) brute-force truth
+    set and the alive-corpus ring overlay depend only on (queries,
+    alive) — not on the build→insert→delete chain — so both start
+    together with the chain and overlap it (guide §2.6; r13 overlay,
+    r14 truth). Row-identical: every leg is deterministic."""
+    out, truth, _ = overlap(
+        chain,
+        lambda: _truth(queries.df, alive.df, GS_K),
+        lambda: alive.overlay(GS_ENTRY, GS_RING),
+    )
+    return out, truth
 
 
 def q_graph_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9346,9 +9298,10 @@ def q_graph_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail edges incremental maintenance cannot see, at a fraction of a
     cold rebuild (1 warm round vs 4 cold). Emits the refreshed
     adjacency; the oracle replays the full chain + the round."""
-    _emb, _nf, _dele, _d, g2, alive, alive_nf, _q, _qn = (
-        _maintained_graph_chain(spark, sf_dir)
+    base, batch, dele, alive, _q = _maintenance_corpus(
+        _table(spark, sf_dir, "embeddings")
     )
+    g2 = _maintained_graph_chain(base, batch, dele)
     # _seed_ranked: g2 is a maintenance output (apply_delta of
     # insert+delete, k-capped at DESCENT_K) so its rank column IS the
     # normalization window's result — skip recomputing it (4 redundant
@@ -9356,7 +9309,7 @@ def q_graph_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _materialize_final=False: the sink reads the result once
     out = similarity.graph_refresh(
         g2, alive, k=DESCENT_K, rounds=GREF_ROUNDS,
-        max_reverse=DESCENT_MAX_REVERSE, vnorm=alive_nf,
+        max_reverse=DESCENT_MAX_REVERSE,
         _materialize_final=False, _seed_ranked=True,
     )
     return out.select(
@@ -9500,62 +9453,12 @@ def q_graph_recall_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.brute_force_topk over the alive corpus
     (operators/similarity.py::recall_at_k) — (qid, hits, k), all
     integers."""
-    # r13: the alive-corpus ring overlay depends only on (emb, the GMS
-    # delete slice) — start it before the descent build so it overlaps
-    # the whole build+CRUD chain (guide §2.6; the
-    # q_graph_maintained_search treatment). r14: the O(Q·N) brute-force
-    # truth set is likewise a pure function of (queries, alive) —
-    # independent of the whole chain — so it materializes on the same
-    # prep pool instead of computing serially inside the final gauge
-    # job (the q_graph_policy_applied prep() treatment; row-identical:
-    # brute_force_topk is deterministic and the raw-table filters below
-    # are byte-identical to the chain-derived slices).
-    from concurrent.futures import ThreadPoolExecutor
-
-    emb0 = _table(spark, sf_dir, "embeddings")
-    alive0 = emb0.join(
-        emb0.where(
-            F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) == GMS_DEL_RES
-        ).select(F.col("vec_id").alias("_did")),
-        F.col("vec_id") == F.col("_did"),
-        "left_anti",
+    base, batch, dele, alive, queries = _maintenance_corpus(
+        _table(spark, sf_dir, "embeddings")
     )
-    queries0 = emb0.where(
-        (F.col("vec_id") < ANN_QUERY_MAX_ID)
-        & (F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) != GMS_DEL_RES)
+    got, truth = _gauge_prep(
+        alive, queries, lambda: _maintained_search(base, batch, dele, queries)
     )
-    _pool = ThreadPoolExecutor(max_workers=2)
-    _ov_fut = _pool.submit(
-        similarity.ring_overlay, alive0, GS_ENTRY, GS_RING
-    )
-    _truth_fut = _pool.submit(
-        lambda: similarity.brute_force_topk(
-            queries0, alive0, k=GS_K
-        ).localCheckpoint(eager=True)
-    )
-    try:
-        emb, base, batch, nf, base_nf, batch_nf, b_ringe, b_entries, dbits = (
-            _graph_family_prologue(spark, sf_dir)
-        )
-        graph = similarity.knn_descent(
-            base, k=DESCENT_K, rounds=DESCENT_ROUNDS,
-            max_reverse=DESCENT_MAX_REVERSE, ring=DESCENT_RING,
-            ring_edges=b_ringe, vnorm=base_nf, bits=dbits,
-        )
-        dele, queries, alive_nf, q_nf = _gms_slices(emb, nf)
-        # _materialize_final=False: recall_at_k reads got exactly once
-        # (one semi-join); r13 batch 7, row-identical
-        got = similarity.graph_maintained_search(
-            queries, graph, base, batch, dele, k=GS_K, k_graph=DESCENT_K,
-            beam=GS_BEAM, rounds=GS_ROUNDS, n_entry=GS_ENTRY, ring=GS_RING,
-            max_reverse=DESCENT_MAX_REVERSE,
-            base_overlay=(b_ringe, b_entries), base_norm=base_nf,
-            batch_norm=batch_nf, alive_norm=alive_nf, qnorm=q_nf,
-            alive_overlay=_ov_fut.result(), _materialize_final=False,
-        )
-        truth = _truth_fut.result()
-    finally:
-        _pool.shutdown(wait=False)
     return (
         similarity.recall_at_k(got, truth)
         .select("qid", "hits", F.lit(GS_K).cast("bigint").alias("k"))
@@ -9660,16 +9563,12 @@ def q_ivf_recall_monitor(
     # on a second driver thread overlapped with the eager index build
     # instead of computing serially inside the final gauge job.
     # Row-identical: both legs deterministic.
-    (got,), truth = similarity._overlap(
-        lambda: (
-            similarity.ivf_maintained_topk(
-                queries, base, batch, dele, k=ANN_K, n_cells=LLOYD_CELLS,
-                n_probe=n_probe, iters=LLOYD_ITERS,
-            ),
+    got, truth = overlap(
+        lambda: similarity.ivf_maintained_topk(
+            queries, base, batch, dele, k=ANN_K, n_cells=LLOYD_CELLS,
+            n_probe=n_probe, iters=LLOYD_ITERS,
         ),
-        lambda: similarity.brute_force_topk(
-            queries, alive, k=ANN_K
-        ).localCheckpoint(eager=True),
+        lambda: _truth(queries, alive, ANN_K),
     )
     return (
         similarity.recall_at_k(got, truth)
@@ -9794,16 +9693,14 @@ def q_index_maintenance_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     concurrency — each gauge's rows are untouched (the monitors are
     deterministic), and the policy frame they union into is built on
     the main thread as before."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from . import serving
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fg = pool.submit(q_graph_recall_monitor, spark, sf_dir)
-        fi = pool.submit(q_ivf_recall_monitor, spark, sf_dir)
-        monitors = {"graph": fg.result(), "ivf": fi.result()}
+    graph, ivf = overlap(
+        lambda: q_graph_recall_monitor(spark, sf_dir),
+        lambda: q_ivf_recall_monitor(spark, sf_dir),
+    )
     return serving.index_maintenance_policy(
-        monitors,
+        {"graph": graph, "ivf": ivf},
         {
             "graph": (GRAPH_HEALTHY_BP, GRAPH_FLOOR_BP),
             "ivf": (IVF_HEALTHY_BP, IVF_FLOOR_BP),
@@ -10093,11 +9990,8 @@ def q_policy_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return cents, postings
 
-    (cents, postings), truth = similarity._overlap(
-        build,
-        lambda: similarity.brute_force_topk(
-            queries, alive, k=ANN_K
-        ).localCheckpoint(eager=True),
+    (cents, postings), truth = overlap(
+        build, lambda: _truth(queries, alive, ANN_K)
     )
 
     def gauge(np_: int) -> DataFrame:
@@ -10686,53 +10580,21 @@ def q_graph_policy_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
     the maintained-graph build AND the O(Q·N) before gauge."""
     from . import serving
 
-    # r13: the O(Q·N) truth set and the alive-corpus ring overlay are
-    # pure functions of (queries, alive) — independent of the whole
-    # build→insert→delete chain — so they materialize on a second
-    # driver thread OVERLAPPED with the chain (guide §2.6); both still
-    # feed BOTH gauge runs (pinned once, O(Q·k) / O(N·ring)).
-    def chain():
-        return _maintained_graph_chain(spark, sf_dir)
-
-    # the prologue inside chain() re-derives the same tiny frames; the
-    # prep leg needs only (queries, alive), rebuilt here from the raw
-    # table (identical filters — no dependency on the chain thread)
-    emb0 = _table(spark, sf_dir, "embeddings")
-    dele0 = emb0.where(
-        F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) == GMS_DEL_RES
-    ).select("vec_id")
-    queries0 = emb0.where(
-        (F.col("vec_id") < ANN_QUERY_MAX_ID)
-        & (F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) != GMS_DEL_RES)
+    base, batch, dele, alive, queries = _maintenance_corpus(
+        _table(spark, sf_dir, "embeddings")
     )
-    alive0 = emb0.join(
-        dele0.withColumnRenamed("vec_id", "_did"),
-        F.col("vec_id") == F.col("_did"),
-        "left_anti",
+    # the truth set and the alive overlay feed BOTH gauge runs (built
+    # once, O(Q·k) / O(N·ring))
+    g2, truth = _gauge_prep(
+        alive, queries, lambda: _maintained_graph_chain(base, batch, dele)
     )
-
-    def prep():
-        truth = similarity.brute_force_topk(
-            queries0, alive0, k=GS_K
-        ).localCheckpoint(eager=True)
-        ringe, entries = similarity.ring_overlay(
-            alive0, n_entry=GS_ENTRY, ring=GS_RING
-        )
-        ringe = ringe.localCheckpoint(eager=True)
-        return truth, ringe, entries
-
-    (
-        (_emb, _nf, _dele, _d, g2, alive, alive_nf, queries, q_nf),
-        (truth, ringe, entries),
-    ) = similarity._overlap(chain, prep)
 
     def gauge(state):
         # _materialize_final=False: recall_at_k reads got exactly once
         # (one semi-join); r13 batch 7, row-identical
         got = similarity.graph_search_topk(
             queries, state, alive, k=GS_K, beam=GS_BEAM, rounds=GS_ROUNDS,
-            n_entry=GS_ENTRY, ring=GS_RING, overlay=(ringe, entries),
-            qnorm=q_nf, cnorm=alive_nf, _materialize_final=False,
+            n_entry=GS_ENTRY, ring=GS_RING, _materialize_final=False,
         )
         return similarity.recall_at_k(got, truth).select(
             "qid", "hits", F.lit(GS_K).cast("bigint").alias("k")
@@ -10745,7 +10607,7 @@ def q_graph_policy_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
         # refreshed adjacency exactly once (r13 batch 7)
         return similarity.graph_refresh(
             state, alive, k=DESCENT_K, rounds=GREF_ROUNDS,
-            max_reverse=DESCENT_MAX_REVERSE, vnorm=alive_nf,
+            max_reverse=DESCENT_MAX_REVERSE,
             _materialize_final=False, _seed_ranked=True,
         )
 
@@ -10896,11 +10758,8 @@ def q_drift_policy_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return old_c, new_c
 
-        (old_c, new_c), truth = similarity._overlap(
-            trains,
-            lambda: similarity.brute_force_topk(
-                queries, alive, k=ANN_K
-            ).localCheckpoint(eager=True),
+        (old_c, new_c), truth = overlap(
+            trains, lambda: _truth(queries, alive, ANN_K)
         )
         moves = similarity.ivf_retrain_delta(
             base, emb, n_cells=LLOYD_CELLS, iters=LLOYD_ITERS,
@@ -11085,60 +10944,28 @@ def q_graph_drift_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .diff import embedding_drift
 
     emb = _table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % IAP_MOD != IAP_MOD - 1)
-    batch = emb.where(F.col("vec_id") % IAP_MOD == IAP_MOD - 1)
-    drift = embedding_drift(base, emb, quant=ED_QUANT)
-    dele = emb.where(
-        F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) == GMS_DEL_RES
-    ).select("vec_id")
-    queries = emb.where(
-        (F.col("vec_id") < ANN_QUERY_MAX_ID)
-        & (F.pmod(F.col("vec_id"), F.lit(GMS_DEL_MOD)) != GMS_DEL_RES)
-    )
+    base, batch, dele, alive, queries = _maintenance_corpus(emb)
+    drift = embedding_drift(base.df, emb, quant=ED_QUANT)
 
     def refresh_leg():
-        # r13: the alive-corpus ring overlay is a pure function of
-        # (emb, dele) — independent of the build→insert→delete chain —
-        # so it materializes on a second driver thread OVERLAPPED with
-        # the chain (guide §2.6); the chain itself is the shared
-        # _maintained_graph_chain over the one-prologue norm_frame.
-        # r14: the O(Q·N) brute-force truth set is likewise a pure
-        # function of (queries, alive) — materialize it on a third
-        # overlapped thunk instead of serially inside the final gauge
-        # job (the q_graph_policy_applied prep() treatment;
-        # row-identical — deterministic, identical filters).
-        d0 = dele.withColumnRenamed("vec_id", "_did")
-        alive0 = emb.join(
-            d0, F.col("vec_id") == F.col("_did"), "left_anti"
-        )
-        (
-            (_e, _nf, _del, _d, g2, alive, alive_nf, qrs, q_nf),
-            (ringe, entries),
-            (truth,),
-        ) = similarity._overlap(
-            lambda: _maintained_graph_chain(spark, sf_dir),
-            lambda: similarity.ring_overlay(
-                alive0, n_entry=GS_ENTRY, ring=GS_RING
-            ),
-            lambda: (
-                similarity.brute_force_topk(
-                    queries, alive0, k=GS_K
-                ).localCheckpoint(eager=True),
-            ),
-        )
+        # the chain is the shared _maintained_graph_chain; the alive
+        # overlay and the truth set overlap it (_gauge_prep).
         # _seed_ranked + _materialize_final=False on the refresh (g2 is
         # a maintenance output; g3 is read once by the search's graph
         # union), _materialize_final=False on the search (recall_at_k
         # reads got once) — r13 batch 7, row-identical
+        g2, truth = _gauge_prep(
+            alive, queries,
+            lambda: _maintained_graph_chain(base, batch, dele),
+        )
         g3 = similarity.graph_refresh(
             g2, alive, k=DESCENT_K, rounds=GREF_ROUNDS,
-            max_reverse=DESCENT_MAX_REVERSE, vnorm=alive_nf,
+            max_reverse=DESCENT_MAX_REVERSE,
             _materialize_final=False, _seed_ranked=True,
         )
         got = similarity.graph_search_topk(
-            qrs, g3, alive, k=GS_K, beam=GS_BEAM, rounds=GS_ROUNDS,
-            n_entry=GS_ENTRY, ring=GS_RING, overlay=(ringe, entries),
-            qnorm=q_nf, cnorm=alive_nf, _materialize_final=False,
+            queries, g3, alive, k=GS_K, beam=GS_BEAM, rounds=GS_ROUNDS,
+            n_entry=GS_ENTRY, ring=GS_RING, _materialize_final=False,
         )
         gauge = similarity.recall_at_k(got, truth).select(
             "qid", "hits", F.lit(GS_K).cast("bigint").alias("k")
@@ -11198,8 +11025,6 @@ def q_snapshot_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-gauged recall outcome, every value from the same operators the
     standalone rows declare. EAGER: construction collects the drift
     decision row."""
-    from . import serving
-    from .diff import embedding_drift
     from .pipeline import cluster_safe_split, split_drift
 
     def _split_leg() -> DataFrame:
@@ -11209,7 +11034,7 @@ def q_snapshot_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig2 = dedup.minhash_signatures(docs).persist()
         # r13: the two signature materializations are independent —
         # overlap them (guide §2.6)
-        similarity._overlap(sig1.count, sig2.count)
+        overlap(sig1.count, sig2.count)
         try:
             pairs1 = dedup.lsh_candidate_pairs(sig1)
             pairs2 = dedup.lsh_candidate_pairs(sig2)
@@ -11263,12 +11088,19 @@ def q_snapshot_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 optimization (guide §2.6): the split-verification leg (over
     # documents) and the drift-controller leg (over embeddings) are
     # fully independent until the final union — run the split leg's
-    # eager chain on a second driver thread so its jobs back-fill the
+    # eager chain beside the controller so its jobs back-fill the
     # controller's idle cores. Row-identical (both legs deterministic).
-    from concurrent.futures import ThreadPoolExecutor
+    crows, srows = overlap(
+        lambda: _snapshot_controller_rows(spark, sf_dir), _split_leg
+    )
+    return srows.unionByName(crows).orderBy("step", "metric")
 
-    _pool = ThreadPoolExecutor(max_workers=1)
-    _srows_fut = _pool.submit(_split_leg)
+
+def _snapshot_controller_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """snapshot_upgrade's drift-controller leg as (step, stage, metric,
+    value) rows."""
+    from . import serving
+    from .diff import embedding_drift
 
     emb = _table(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % IAP_MOD != IAP_MOD - 1)
@@ -11299,11 +11131,8 @@ def q_snapshot_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return old_c, new_c
 
-        (old_c, new_c), truth = similarity._overlap(
-            trains,
-            lambda: similarity.brute_force_topk(
-                queries, alive, k=ANN_K
-            ).localCheckpoint(eager=True),
+        (old_c, new_c), truth = overlap(
+            trains, lambda: _truth(queries, alive, ANN_K)
         )
         moves = similarity.ivf_retrain_delta(
             base, emb, n_cells=LLOYD_CELLS, iters=LLOYD_ITERS,
@@ -11327,7 +11156,7 @@ def q_snapshot_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         recall_healthy_bp=SU_HEALTHY_BP,
     )
-    crows = ctrl.selectExpr(
+    return ctrl.selectExpr(
         "stack(6, "
         "2, 'embedding_drift', 'n_dims', cast(n_dims as string), "
         "2, 'embedding_drift', 'max_abs_drift_q', "
@@ -11338,11 +11167,6 @@ def q_snapshot_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "5, 'recall', 'outcome', outcome"
         ") as (step, stage, metric, value)"
     )
-    try:
-        srows = _srows_fut.result()
-    finally:
-        _pool.shutdown()
-    return srows.unionByName(crows).orderBy("step", "metric")
 
 
 register_extra(

@@ -21,9 +21,14 @@ the defensive rounding.
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import Future
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .overlap import overlap
 
 SIGN_BITS = 8  # coarse cell = sign pattern of the first 8 dims
 
@@ -3106,7 +3111,6 @@ def knn_edges_bucketed(
     bits: int | None = None,
     max_bucket_size: int | None = None,
     target_cell_size: int = 32,
-    vnorm: DataFrame | None = None,
 ) -> DataFrame:
     """Directed k-nearest-neighbour edges within sign-LSH cells:
     ``(src, dst, cos_sim, rank)`` — each vector's ``k`` most similar
@@ -3117,20 +3121,17 @@ def knn_edges_bucketed(
     ``max_bucket_size`` is the degenerate-cell valve, as everywhere in
     the pair family).
 
-    ``vnorm`` (r13, row-identical): a prebuilt MATERIALIZED
-    :func:`norm_frame` over this exact ``df`` — the cell/norm columns
-    derive from its cached rows (same expressions), and the
-    ``bits=None`` auto-count runs over it instead of
-    ``_resolve_bits``'s own checkpoint, dropping one corpus
-    materialization from every descent build.
+    ``df`` may be an :class:`IndexCorpus`: the cell and norm columns
+    then derive from its memoized norm frame (same expressions) and
+    ``bits=None`` from its memoized row count.
     """
     from .dedup import _cap_buckets
 
-    if vnorm is not None:
+    if isinstance(df, IndexCorpus):
         if bits is None:
-            bits = auto_sign_bits(vnorm.count(), target_cell_size)
+            bits = auto_sign_bits(df.count(), target_cell_size)
         cells = with_cell_rh(
-            vnorm.select(
+            df.norm().select(
                 F.col("_vid").alias(id_col),
                 F.col("_vv").alias(vec_col),
                 F.col("_vn").alias("_n"),
@@ -3205,11 +3206,11 @@ def norm_frame(
     §1.2 step 1) so a composed chain (build → insert → delete →
     refresh → search over slices of ONE corpus) materializes the
     corpus projection ONCE and derives each stage's side by a cheap
-    filter over the cached rows, instead of each stage paying its own
-    eager materialization job. The norm expression is byte-identical
-    to the inline builds it replaces (shared :func:`_norm`), so
-    passing a ``norm_frame`` slice through the ``vnorm``/``qnorm``/
-    ``cnorm`` seams is row-identical by construction (pytest-pinned).
+    filter over the cached rows (:meth:`IndexCorpus.norm`), instead of
+    each stage paying its own eager materialization job. The norm
+    expression is byte-identical to the inline builds it replaces
+    (shared :func:`_norm`), so a slice of it is row-identical by
+    construction (pytest-pinned).
     """
     v = corpus.select(
         F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vv")
@@ -3219,23 +3220,164 @@ def norm_frame(
     return v
 
 
-def _overlap(*thunks):
-    """Run independent eager-materialization thunks on driver threads
-    (guide §2.6 — overlap independent job chains so one chain's jobs
-    back-fill the other's idle cores). Each thunk is deterministic and
-    returns its (already materialized) result; concurrency changes
-    scheduling only, never rows. With one thunk, runs inline."""
-    if len(thunks) == 1:
-        return (thunks[0](),)
-    from concurrent.futures import ThreadPoolExecutor
+class IndexCorpus:
+    """A vector corpus prepared once for the graph-ANN operators.
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
-        return tuple(f.result() for f in futs)
+    :func:`knn_edges_bucketed`, :func:`knn_descent`,
+    :func:`graph_refresh`, :func:`ring_overlay`,
+    :func:`graph_search_topk`, :func:`graph_insert`,
+    :func:`graph_delete` and :func:`graph_maintained_search` accept one
+    wherever they take a vector DataFrame. Given a plain DataFrame an
+    operator builds the artifacts below for its own call only, exactly
+    as it always has; given an ``IndexCorpus`` every operator reads the
+    same ones — shared materialized intermediates consumed by small
+    operators ("Building Advanced SQL Analytics From Low-Level Plan
+    Operators", PAPERS.md). Memoized:
+
+    - :meth:`norm` — the materialized :func:`norm_frame`;
+    - :meth:`overlay` — the hash-ring overlay, one per ``(seed,
+      ring)``; the entry points are its ``pos < n_entry`` filter, and
+      the ring edges are a lazy checkpoint: the first consumer's job
+      materializes them, later consumers read the cached rows (a
+      corpus an operator makes from a plain DataFrame leaves them a
+      plain plan — they have one consumer there);
+    - :meth:`count` — the exact row count, taken from an overlay's
+      ranking (no separate count job).
+
+    Each memo entry is a future: a thread that asks for an artifact
+    another thread is building waits for it instead of building it
+    again. So artifacts asked for by independent chains build side by
+    side (:mod:`.overlap`), and a caller can start one beside a chain
+    (``overlap(chain, lambda: c.overlay(n_entry, ring))``) for an
+    operator inside the chain to pick up.
+
+    ``where(cond)`` gives a slice over the same root; ``cond`` may
+    reference only the id column. A slice's norm frame is the root's
+    filtered by ``cond`` (no new materialization); its overlay and
+    count are its own, since ring positions are dense over the slice's
+    rows. ``a | b`` and ``a - b`` are the union and the difference of
+    slices of one root, and the same operands give the same slice, so
+    the alive corpus a caller derives as ``(base | batch) - dele`` is
+    the one :func:`graph_maintained_search` derives. Every derived
+    frame holds exactly the rows of the straight-line form, so results
+    are row-identical (pytest-pinned).
+    """
+
+    def __init__(
+        self,
+        df: DataFrame,
+        vec_col: str = "embedding",
+        id_col: str = "vec_id",
+        _materialize: bool = True,
+        _per_call: bool = False,
+        _root: IndexCorpus | None = None,
+        _cond: Column | None = None,
+    ):
+        self.df, self.vec_col, self.id_col = df, vec_col, id_col
+        self._materialize, self._per_call = _materialize, _per_call
+        self._root, self._cond = _root or self, _cond
+        self._memo: dict = {}
+        self._lock = threading.Lock()
+
+    def _check_root(self, other: IndexCorpus) -> None:
+        if other._root is not self._root:
+            raise ValueError("slices of different IndexCorpus roots")
+
+    def _get(self, key, build):
+        with self._lock:
+            fut = self._memo.get(key)
+            owner = fut is None
+            if owner:
+                fut = self._memo[key] = Future()
+        if owner:
+            try:
+                fut.set_result(build())
+            except BaseException as e:
+                fut.set_exception(e)
+                raise
+        return fut.result()
+
+    def where(self, cond: Column) -> IndexCorpus:
+        if self._cond is not None:
+            cond = self._cond & cond
+        r = self._root
+        return IndexCorpus(
+            r.df.where(cond), r.vec_col, r.id_col, r._materialize,
+            _root=r, _cond=cond,
+        )
+
+    def __or__(self, other: IndexCorpus) -> IndexCorpus:
+        self._check_root(other)
+
+        def build():
+            if self._cond is None or other._cond is None:
+                return self._root
+            return self._root.where(self._cond | other._cond)
+
+        return self._get(("|", other), build)
+
+    def __sub__(self, other: IndexCorpus) -> IndexCorpus:
+        self._check_root(other)
+        return self._get(("-", other), lambda: self.where(~other._cond))
+
+    def norm(self) -> DataFrame:
+        """The ``(_vid, _vv, _vn)`` :func:`norm_frame`."""
+        if self._cond is None:
+            return self._get(("norm",), lambda: norm_frame(
+                self.df, self.vec_col, self.id_col, self._materialize
+            ))
+        return self._get(("norm",), lambda: (
+            self._root.norm()
+            .withColumnRenamed("_vid", self.id_col)
+            .where(self._cond)
+            .withColumnRenamed(self.id_col, "_vid")
+        ))
+
+    def overlay(
+        self, n_entry: int = 4, ring: int = 4, seed: str = IVF_SEED
+    ) -> tuple[DataFrame, DataFrame]:
+        """``(ringe, entries)`` of :func:`ring_overlay`."""
+        pos, ringe, _n = self._get(
+            ("overlay", seed, ring),
+            lambda: _ring_overlay(
+                self.df, ring, self.id_col, seed, self._materialize,
+                pin=self._materialize and not self._root._per_call,
+            ),
+        )
+        entries = pos.where(F.col("pos") < n_entry).select(
+            F.col(self.id_col).alias("nid")
+        )
+        return ringe, entries
+
+    def count(self) -> int:
+        """The exact row count: an overlay's ranking total when one is
+        built or building, else one count over the norm frame."""
+        with self._lock:
+            ov = [f for k, f in self._memo.items() if k[0] == "overlay"]
+        if ov:
+            return ov[0].result()[2]
+        return self._get(("count",), lambda: self.norm().count())
+
+
+def _frame(x: DataFrame | IndexCorpus) -> DataFrame:
+    return x.df if isinstance(x, IndexCorpus) else x
+
+
+def _as_corpus(
+    x: DataFrame | IndexCorpus,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    _materialize: bool = True,
+) -> IndexCorpus:
+    """``x`` itself, or a corpus whose artifacts serve one call: each
+    has one consumer there, so its ring edges stay a lazy plan."""
+    if isinstance(x, IndexCorpus):
+        return x
+    return IndexCorpus(x, vec_col, id_col, _materialize, _per_call=True)
 
 
 def knn_descent(
-    df: DataFrame,
+    df: DataFrame | IndexCorpus,
     k: int = 3,
     rounds: int = 2,
     vec_col: str = "embedding",
@@ -3247,18 +3389,12 @@ def knn_descent(
     ring: int = 2,
     seed: str = IVF_SEED,
     _materialize: bool = True,
-    ring_edges: DataFrame | None = None,
-    vnorm: DataFrame | None = None,
     _materialize_final: bool = True,
 ) -> DataFrame:
-    """(``ring_edges`` — an already-built :func:`ring_overlay` edge
-    frame for this exact ``df``/``seed``/``ring`` — skips the per-call
-    ring recomputation; ``vnorm`` — a prebuilt :func:`norm_frame` over
-    this exact ``df`` — skips the per-call corpus materialization;
-    ``_materialize_final=False`` — skip the LAST round's edge
+    """(``_materialize_final=False`` — skip the LAST round's edge
     checkpoint when the caller reads the result exactly once (its job
     absorbs one round's plan — the graph_search_topk contract); r13
-    optimizations, row-identical.)
+    optimization, row-identical.)
 
     kNN-graph construction by NN-DESCENT (Dong, Moses & Li, WWW
     2011): seed a directed top-``k`` graph, then repeatedly offer each
@@ -3303,39 +3439,24 @@ def knn_descent(
     """
     # r13: every descent round's materialization job re-scans the
     # corpus and recomputes the norms to rebuild the va/vb score-join
-    # sides (broadcast reuse does not cross job boundaries) — cache the
-    # N-row (id, vec, norm) frame once per call instead (or reuse the
-    # caller's via ``vnorm``), and feed the SAME cached frame to the
-    # LSH seed so _resolve_bits' separate corpus checkpoint drops too.
-    # The v materialization and the ring overlay are independent eager
-    # chains → overlapped on driver threads (guide §2.6).
-    build_v = (
-        (lambda: vnorm)
-        if vnorm is not None
-        else (lambda: norm_frame(df, vec_col, id_col, _materialize))
-    )
-    if ring and ring_edges is None:
-        v, (ringe_built, _e, _n_ring) = _overlap(
-            build_v,
-            lambda: ring_overlay(
-                df, 0, ring, id_col, seed, _materialize, with_total=True
-            ),
-        )
-        # r14: the overlay's ranking already collected the exact corpus
-        # row count — derive the auto-bits knob from it instead of
-        # paying knn_edges_bucketed's separate O(N) count job (same
-        # count over the same rows, so the bits value — and therefore
-        # every cell and edge — is identical by construction).
-        if bits is None:
-            bits = auto_sign_bits(_n_ring, target_cell_size)
+    # sides (broadcast reuse does not cross job boundaries) — read the
+    # corpus's one cached (id, vec, norm) frame instead, and feed the
+    # SAME frame to the LSH seed so _resolve_bits' separate corpus
+    # checkpoint drops too. The norm frame and the ring overlay are
+    # independent eager chains → overlapped (guide §2.6). r14: the
+    # overlay's ranking already collected the exact row count — the
+    # auto-bits knob derives from it instead of a separate O(N) count
+    # job (same count over the same rows, so every cell and edge is
+    # identical by construction).
+    c = _as_corpus(df, vec_col, id_col, _materialize)
+    if ring:
+        v, (ringe, _e) = overlap(c.norm, lambda: c.overlay(0, ring, seed))
     else:
-        v = build_v()
-        ringe_built = None
+        v = c.norm()
+    if bits is None:
+        bits = auto_sign_bits(c.count(), target_cell_size)
     edges = knn_edges_bucketed(
-        df, k, vec_col, id_col, bits, max_bucket_size, target_cell_size,
-        # only a MATERIALIZED frame may back the auto-bits count (a
-        # lazy one would execute its plan twice — the r6 rule)
-        vnorm=v if (_materialize or vnorm is not None) else None,
+        c, k, vec_col, id_col, bits, max_bucket_size, target_cell_size
     )
     va = v.select(
         F.col("_vid").alias("src"), F.col("_vv").alias("av"),
@@ -3349,11 +3470,6 @@ def knn_descent(
         F.col("cos_sim").desc(), F.col("dst").asc()
     )
     if ring:
-        # the ring is the shared :func:`ring_overlay` construction
-        # (dense 0..N-1 hash positions via the range-exchange rank,
-        # successor offsets by explode — never a single-partition sort
-        # or a crossJoin); ``ring_edges`` reuses a caller-built one
-        ringe = ring_edges if ring_edges is not None else ringe_built
         # one shared src exchange for dedup + the seed-rank window
         # (the _nn_descent_rounds cand trick; 2 Exchange → 1)
         seedp = (
@@ -3395,7 +3511,6 @@ def _nn_descent_rounds(
     k: int,
     max_reverse: int | None,
     _materialize: bool,
-    materialize_every: int = 1,
     _materialize_final: bool = True,
 ) -> DataFrame:
     """The NN-descent round loop, shared verbatim by
@@ -3464,35 +3579,29 @@ def _nn_descent_rounds(
         # descent round references `edges` ~5× (fwd, rev, und⋈und),
         # so skipping a round's checkpoint grows the next plan ~5× —
         # measured SLOWER at every-2 (11.2 s vs 9.6 s) and 3× worse
-        # at every-4; the per-round cadence stays (materialize_every
-        # is the measured seam, default 1). The LAST round's checkpoint
-        # is skippable via _materialize_final when the caller reads the
-        # result exactly once (its job absorbs one round's plan — the
-        # graph_search_topk _materialize_final contract).
-        if _materialize and (
-            ((_r + 1) % materialize_every == 0 or _r == rounds - 1)
-            and (_r < rounds - 1 or _materialize_final)
-        ):
+        # at every-4; the per-round cadence stays. The LAST round's
+        # checkpoint is skippable via _materialize_final when the
+        # caller reads the result exactly once (its job absorbs one
+        # round's plan — the graph_search_topk _materialize_final
+        # contract).
+        if _materialize and (_r < rounds - 1 or _materialize_final):
             edges = edges.localCheckpoint(eager=True)
     return edges
 
 
 def graph_refresh(
     graph: DataFrame,
-    corpus: DataFrame,
+    corpus: DataFrame | IndexCorpus,
     k: int = 8,
     rounds: int = 1,
     max_reverse: int | None = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     _materialize: bool = True,
-    vnorm: DataFrame | None = None,
     _materialize_final: bool = True,
     _seed_ranked: bool = False,
 ) -> DataFrame:
-    """(``vnorm`` — a prebuilt :func:`norm_frame` over this exact
-    ``corpus`` — skips the per-call corpus materialization;
-    ``_materialize_final=False`` — skip the last round's checkpoint
+    """(``_materialize_final=False`` — skip the last round's checkpoint
     when the caller reads the result exactly once; ``_seed_ranked=True``
     — trust the input graph's existing ``rank`` column instead of
     recomputing the normalization window. Only pass ``_seed_ranked``
@@ -3528,13 +3637,9 @@ def graph_refresh(
     to a build round; ``graph`` must carry scored rows (src, dst,
     cos_sim), which every maintenance output in this module does.
     Returns the refreshed ``(src, dst, cos_sim, rank)`` top-``k``."""
-    # r13: cache the (id, vec, norm) frame once per refresh — see the
+    # r13: one cached (id, vec, norm) frame per refresh — see the
     # knn_descent note (per-round broadcast rebuilds don't cross jobs)
-    v = (
-        vnorm
-        if vnorm is not None
-        else norm_frame(corpus, vec_col, id_col, _materialize)
-    )
+    v = _as_corpus(corpus, vec_col, id_col, _materialize).norm()
     va = v.select(
         F.col("_vid").alias("src"), F.col("_vv").alias("av"),
         F.col("_vn").alias("_na"),
@@ -3565,45 +3670,32 @@ def graph_refresh(
     )
 
 
-def ring_overlay(
-    corpus: DataFrame,
-    n_entry: int = 4,
-    ring: int = 4,
-    id_col: str = "vec_id",
-    seed: str = IVF_SEED,
-    _materialize: bool = True,
-    with_total: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """The deterministic hash-ring overlay + entry points of
-    :func:`graph_search_topk`, factored out so a caller that searches
-    the SAME corpus repeatedly (the graph controller's before/after
-    gauges) computes it once and passes it in via ``overlay=`` —
-    row-identical to the inline computation (pure function of
-    (corpus, seed); r13 optimization). Returns ``(ringe, entries)``:
-    the ring successor edges ``(src, dst)`` and the first ``n_entry``
-    ring nodes ``(nid)``.
-
-    ``with_total=True`` additionally returns the exact corpus row
-    count as a third element — the ranking's offsets collect already
-    holds it (r14, guide §1.2 step 1: the caller's auto-bits knob
-    count over the same corpus becomes free instead of a separate
-    O(N) probe job)."""
+def _ring_overlay(
+    df: DataFrame,
+    ring: int,
+    id_col: str,
+    seed: str,
+    materialize: bool,
+    pin: bool,
+) -> tuple[DataFrame, DataFrame, int]:
+    """``(pos, ringe, n_total)`` for :meth:`IndexCorpus.overlay`: the
+    dense ring positions, the successor edges (checkpointed when
+    ``pin``), and the exact row count the ranking's offsets collect
+    already holds (r14, guide §1.2 step 1: a caller's auto-bits count
+    over the same rows is free)."""
     from wasaffi_spark.operators import ranking
 
     h = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
     ranked, n_total = ranking.global_row_number_with_total(
-        corpus.select(id_col).withColumn("_h", h),
+        df.select(id_col).withColumn("_h", h),
         [F.col("_h").asc(), F.col(id_col).asc()],
         out_col="_grn",
     )
     pos = ranked.withColumn("pos", F.col("_grn") - F.lit(1)).select(
         id_col, "pos"
     )
-    if _materialize:
+    if materialize:
         pos = pos.localCheckpoint(eager=True)
-    entries = pos.where(F.col("pos") < n_entry).select(
-        F.col(id_col).alias("nid")
-    )
     ringe = (
         pos.withColumn(
             "_j",
@@ -3621,15 +3713,35 @@ def ring_overlay(
         .where(F.col(id_col) != F.col("_did"))
         .select(F.col(id_col).alias("src"), F.col("_did").alias("dst"))
     )
-    if with_total:
-        return ringe, entries, n_total
-    return ringe, entries
+    if pin:
+        # lazy: the first consumer's job materializes the edges and
+        # later consumers read the cached rows, with no job of its own
+        ringe = ringe.localCheckpoint(eager=False)
+    return pos, ringe, n_total
+
+
+def ring_overlay(
+    corpus: DataFrame | IndexCorpus,
+    n_entry: int = 4,
+    ring: int = 4,
+    id_col: str = "vec_id",
+    seed: str = IVF_SEED,
+    _materialize: bool = True,
+) -> tuple[DataFrame, DataFrame]:
+    """The deterministic hash-ring overlay + entry points of
+    :func:`graph_search_topk` and :func:`knn_descent`: a pure function
+    of (corpus, seed, ring), which an :class:`IndexCorpus` builds once
+    for every search and build over it. Returns ``(ringe, entries)``:
+    the ring successor edges ``(src, dst)`` and the first ``n_entry``
+    ring nodes ``(nid)``."""
+    c = _as_corpus(corpus, id_col=id_col, _materialize=_materialize)
+    return c.overlay(n_entry, ring, seed)
 
 
 def graph_search_topk(
-    queries: DataFrame,
+    queries: DataFrame | IndexCorpus,
     graph: DataFrame,
-    corpus: DataFrame,
+    corpus: DataFrame | IndexCorpus,
     k: int = 3,
     beam: int = 8,
     rounds: int = 4,
@@ -3639,21 +3751,12 @@ def graph_search_topk(
     id_col: str = "vec_id",
     seed: str = IVF_SEED,
     _materialize: bool = True,
-    overlay: tuple[DataFrame, DataFrame] | None = None,
-    qnorm: DataFrame | None = None,
-    cnorm: DataFrame | None = None,
     _materialize_final: bool = True,
 ) -> DataFrame:
-    """(``overlay`` — an already-built :func:`ring_overlay` pair for
-    this exact ``corpus``/``seed``/``n_entry``/``ring`` — skips the
-    per-call ring recomputation; ``qnorm``/``cnorm`` — prebuilt
-    :func:`norm_frame` slices for this exact ``queries``/``corpus`` —
-    skip the per-call query/corpus materializations;
-    ``_materialize_final=False`` — skip the LAST frontier checkpoint
+    """(``_materialize_final=False`` — skip the LAST frontier checkpoint
     when the caller immediately re-materializes the result (e.g.
     :func:`graph_insert`'s ``found``), folding two back-to-back
-    materialization jobs into one; r13 optimizations, all
-    row-identical.)
+    materialization jobs into one; r13 optimization, row-identical.)
 
     Greedy beam search over a prebuilt kNN graph — the SEARCH side
     of :func:`knn_descent`'s build side, the HNSW-layer-0 shape
@@ -3695,40 +3798,24 @@ def graph_search_topk(
     ``_materialize=False`` is the plan-audit seam). Returns ``(qid,
     nid, cos_sim, rank)``, rank 1..k; recall measured in
     tools/ann_recall.py vs the IVF rungs."""
-    # r13: q and c feed every round's score join — cache each once per
-    # search so the per-round materialization jobs read cached rows
-    # instead of re-deriving corpus+norms (see the knn_descent note),
-    # or derive them from caller-shared norm_frame slices; whatever
-    # still builds here (q, c, overlay) is independent eager chains →
-    # overlapped on driver threads (guide §2.6)
-    def build_q():
-        if qnorm is not None:
-            return qnorm.select(
-                F.col("_vid").alias("qid"), F.col("_vv").alias("qv"),
-                F.col("_vn").alias("_nq"),
-            )
-        q0 = queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).withColumn("_nq", _norm(F.col("qv")))
-        return q0.localCheckpoint(eager=True) if _materialize else q0
-
-    def build_c():
-        if cnorm is not None:
-            return cnorm.select(
-                F.col("_vid").alias("nid"), F.col("_vv").alias("nv"),
-                F.col("_vn").alias("_nn"),
-            )
-        c0 = corpus.select(
-            F.col(id_col).alias("nid"), F.col(vec_col).alias("nv")
-        ).withColumn("_nn", _norm(F.col("nv")))
-        return c0.localCheckpoint(eager=True) if _materialize else c0
-
-    def build_overlay():
-        if overlay is not None:
-            return overlay
-        return ring_overlay(corpus, n_entry, ring, id_col, seed, _materialize)
-
-    q, c, (ringe, entries) = _overlap(build_q, build_c, build_overlay)
+    # r13: q and c feed every round's score join — read each side's
+    # cached norm frame so the per-round materialization jobs read
+    # cached rows instead of re-deriving corpus+norms (see the
+    # knn_descent note); whatever still builds here (q, c, overlay) is
+    # independent eager chains → overlapped (guide §2.6)
+    qc = _as_corpus(queries, vec_col, id_col, _materialize)
+    cc = _as_corpus(corpus, vec_col, id_col, _materialize)
+    qn, cn, (ringe, entries) = overlap(
+        qc.norm, cc.norm, lambda: cc.overlay(n_entry, ring, seed)
+    )
+    q = qn.select(
+        F.col("_vid").alias("qid"), F.col("_vv").alias("qv"),
+        F.col("_vn").alias("_nq"),
+    )
+    c = cn.select(
+        F.col("_vid").alias("nid"), F.col("_vv").alias("nv"),
+        F.col("_vn").alias("_nn"),
+    )
     g = graph.select("src", "dst")
     if ring:
         g = g.union(ringe).distinct()
@@ -3788,9 +3875,9 @@ def graph_search_topk(
 
 
 def graph_insert(
-    batch: DataFrame,
+    batch: DataFrame | IndexCorpus,
     graph: DataFrame,
-    base: DataFrame,
+    base: DataFrame | IndexCorpus,
     k: int = 8,
     beam: int = 8,
     rounds: int = 4,
@@ -3801,16 +3888,8 @@ def graph_insert(
     id_col: str = "vec_id",
     seed: str = IVF_SEED,
     _materialize: bool = True,
-    overlay: tuple[DataFrame, DataFrame] | None = None,
-    qnorm: DataFrame | None = None,
-    cnorm: DataFrame | None = None,
 ) -> DataFrame:
-    """(``overlay`` — a prebuilt :func:`ring_overlay` pair over
-    ``base``; ``qnorm``/``cnorm`` — prebuilt :func:`norm_frame` slices
-    over this exact ``batch``/``base``, forwarded to the internal
-    search; r13 optimizations, row-identical.)
-
-    Incremental graph-ANN index maintenance — the search-then-link
+    """Incremental graph-ANN index maintenance — the search-then-link
     INSERT of HNSW/Vamana (Malkov & Yashunin TPAMI 2020 §4 insert;
     DiskANN's FreshVamana shape): for every new vector in ``batch``,
     find its ``k`` nearest BASE nodes by :func:`graph_search_topk`
@@ -3848,8 +3927,7 @@ def graph_insert(
     found = graph_search_topk(
         batch, graph, base, k=k, beam=beam, rounds=rounds,
         n_entry=n_entry, ring=ring, vec_col=vec_col, id_col=id_col,
-        seed=seed, _materialize=_materialize, overlay=overlay,
-        qnorm=qnorm, cnorm=cnorm, _materialize_final=False,
+        seed=seed, _materialize=_materialize, _materialize_final=False,
     )
     if _materialize:
         found = found.localCheckpoint(eager=True)
@@ -3884,20 +3962,15 @@ def graph_insert(
 
 
 def graph_delete(
-    delete_ids: DataFrame,
+    delete_ids: DataFrame | IndexCorpus,
     graph: DataFrame,
-    corpus: DataFrame,
+    corpus: DataFrame | IndexCorpus,
     k: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     _materialize: bool = True,
-    vnorm: DataFrame | None = None,
 ) -> DataFrame:
-    """(``vnorm`` — a prebuilt :func:`norm_frame` over this exact
-    ``corpus``, replacing the lazy per-call id+vec+norm projection;
-    r13 optimization, row-identical.)
-
-    Incremental graph-ANN DELETE with repair — the other half of
+    """Incremental graph-ANN DELETE with repair — the other half of
     :func:`graph_insert`'s maintenance story (the FreshDiskANN /
     FreshVamana delete rule, Singh et al. 2021): removing a node must
     not just drop edges, it must PATCH the holes it leaves, or the
@@ -3915,11 +3988,13 @@ def graph_delete(
 
     Scale: the bridge join touches |edges into D| × k candidate rows
     and only AFFECTED adjacency lists re-rank — never the whole graph;
-    scoring joins the corpus by id for candidate vectors only. Returns
+    scoring joins the corpus by id for candidate vectors only (a plain
+    DataFrame corpus is read through a lazy id+vec+norm projection, an
+    :class:`IndexCorpus` through its cached norm frame). Returns
     the updated adjacency slice ``(src, dst, cos_sim, rank)`` for
     every affected node (rows for unaffected nodes are unchanged by
     definition; deleted nodes emit nothing)."""
-    d = delete_ids.select(F.col(id_col).alias("_did")).distinct()
+    d = _frame(delete_ids).select(F.col(id_col).alias("_did")).distinct()
     if _materialize:
         d = d.localCheckpoint(eager=True)
     g = graph.select("src", "dst", "cos_sim")
@@ -3943,8 +4018,8 @@ def graph_delete(
         .distinct()
     )
     v = (
-        vnorm
-        if vnorm is not None
+        corpus.norm()
+        if isinstance(corpus, IndexCorpus)
         else norm_frame(corpus, vec_col, id_col, materialize=False)
     )
     scored_cand = (
@@ -4012,11 +4087,11 @@ def graph_apply_delta(graph: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 def graph_maintained_search(
-    queries: DataFrame,
+    queries: DataFrame | IndexCorpus,
     graph: DataFrame,
-    base: DataFrame,
-    batch: DataFrame,
-    delete_ids: DataFrame,
+    base: DataFrame | IndexCorpus,
+    batch: DataFrame | IndexCorpus,
+    delete_ids: DataFrame | IndexCorpus,
     k: int = 3,
     k_graph: int = 8,
     beam: int = 8,
@@ -4028,28 +4103,9 @@ def graph_maintained_search(
     id_col: str = "vec_id",
     seed: str = IVF_SEED,
     _materialize: bool = True,
-    base_overlay: tuple[DataFrame, DataFrame] | None = None,
-    base_norm: DataFrame | None = None,
-    batch_norm: DataFrame | None = None,
-    alive_norm: DataFrame | None = None,
-    qnorm: DataFrame | None = None,
-    alive_overlay: tuple[DataFrame, DataFrame] | None = None,
     _materialize_final: bool = True,
 ) -> DataFrame:
-    """(``base_overlay`` — a prebuilt :func:`ring_overlay` pair over
-    ``base``, forwarded to the insert's search; ``base_norm``/
-    ``batch_norm``/``alive_norm``/``qnorm`` — prebuilt
-    :func:`norm_frame` slices over exactly ``base``/``batch``/the
-    alive corpus/``queries``, letting a caller that derives all sides
-    from ONE corpus share a single materialization across every stage;
-    r13 optimizations, row-identical. The FINAL search's overlay is
-    over the alive corpus and is built here as always — but on a
-    driver thread OVERLAPPED with the insert→delete chain (guide
-    §2.6): the overlay + final-search prep depend only on
-    (corpus, delete_ids), not on the maintained adjacency, so their
-    jobs back-fill the CRUD chain's idle cores.)
-
-    Search over a MAINTAINED graph index — the composed
+    """Search over a MAINTAINED graph index — the composed
     insert→delete→search chain a production graph-ANN pipeline
     actually serves (VERDICT r9 What's-missing #5; the graph analogue
     of ``ivf_append_topk``): what matters operationally is not the
@@ -4070,6 +4126,15 @@ def graph_maintained_search(
        recomputed over the ALIVE corpus (base ∪ batch − deleted) —
        exactly what a server would navigate after the CRUD settled.
 
+    The final search's overlay and norm sides depend only on (corpus,
+    delete_ids), not on the maintained adjacency, so they build on a
+    driver thread OVERLAPPED with the insert→delete chain (guide §2.6)
+    and their jobs back-fill the chain's idle cores. When ``base``,
+    ``batch`` and ``delete_ids`` are slices of one :class:`IndexCorpus`
+    every stage reads that corpus's artifacts, and the alive corpus is
+    the slice ``(base | batch) - delete_ids``, so an overlay the caller
+    started on it early is picked up here.
+
     Deterministic end to end (every stage shares the rounded-cosine /
     id-tiebreak contract), so the full chain — base-build replay,
     insert search+splice, delete repair, final beam search — unrolls
@@ -4083,26 +4148,26 @@ def graph_maintained_search(
     links and local repair is not a global rebuild — production
     interleaves this chain with periodic re-descent (SCALE.md).
     Returns ``(qid, nid, cos_sim, rank)``, rank 1..k."""
-    corpus = base.select(id_col, vec_col).unionByName(
-        batch.select(id_col, vec_col)
-    )
-    d = delete_ids.select(F.col(id_col).alias("_did")).distinct()
-    alive = corpus.join(
-        d, F.col(id_col) == F.col("_did"), "left_anti"
-    )
-    corpus_norm = (
-        base_norm.unionByName(batch_norm)
-        if base_norm is not None and batch_norm is not None
-        else None
-    )
+    d = _frame(delete_ids).select(F.col(id_col).alias("_did")).distinct()
+    if all(isinstance(x, IndexCorpus) for x in (base, batch, delete_ids)):
+        corpus = base | batch
+        alive = corpus - delete_ids
+    else:
+        corpus = _frame(base).select(id_col, vec_col).unionByName(
+            _frame(batch).select(id_col, vec_col)
+        )
+        alive = _as_corpus(
+            corpus.join(d, F.col(id_col) == F.col("_did"), "left_anti"),
+            vec_col, id_col, _materialize,
+        )
+    qc = _as_corpus(queries, vec_col, id_col, _materialize)
 
     def crud():
         ins = graph_insert(
             batch, graph, base, k=k_graph, beam=beam, rounds=rounds,
             n_entry=n_entry, ring=ring, max_reverse=max_reverse,
             vec_col=vec_col, id_col=id_col, seed=seed,
-            _materialize=_materialize, overlay=base_overlay,
-            qnorm=batch_norm, cnorm=base_norm,
+            _materialize=_materialize,
         )
         g1 = graph_apply_delta(graph, ins)
         if _materialize:
@@ -4110,7 +4175,6 @@ def graph_maintained_search(
         rep = graph_delete(
             d.select(F.col("_did").alias(id_col)), g1, corpus, k=k_graph,
             vec_col=vec_col, id_col=id_col, _materialize=_materialize,
-            vnorm=corpus_norm,
         )
         g2 = graph_apply_delta(g1, rep).join(
             d, F.col("src") == F.col("_did"), "left_anti"
@@ -4120,43 +4184,16 @@ def graph_maintained_search(
         return g2
 
     def prep():
-        # alive_overlay: a caller-prebuilt ring_overlay pair over the
-        # alive corpus (pure function of (corpus, delete_ids)) — lets
-        # the caller start it even EARLIER than this prep thread, e.g.
-        # overlapped with the descent build that precedes this call
-        # (r13, row-identical)
-        ov = (
-            alive_overlay
-            if alive_overlay is not None
-            else ring_overlay(alive, n_entry, ring, id_col, seed, _materialize)
-        )
-        cn = (
-            alive_norm
-            if alive_norm is not None
-            else (
-                corpus_norm.join(
-                    d, F.col("_vid") == F.col("_did"), "left_anti"
-                )
-                if corpus_norm is not None
-                else norm_frame(alive, vec_col, id_col, _materialize)
-            )
-        )
-        qn = (
-            qnorm
-            if qnorm is not None
-            else norm_frame(queries, vec_col, id_col, _materialize)
-        )
-        return ov, cn, qn
+        alive.overlay(n_entry, ring, seed)
+        alive.norm()
+        qc.norm()
 
-    if _materialize:
-        g2, (ov, cn, qn) = _overlap(crud, prep)
-    else:
-        g2, (ov, cn, qn) = crud(), prep()
+    g2, _ = overlap(crud, prep)
     return graph_search_topk(
-        queries, g2, alive, k=k, beam=beam, rounds=rounds,
+        qc, g2, alive, k=k, beam=beam, rounds=rounds,
         n_entry=n_entry, ring=ring, vec_col=vec_col, id_col=id_col,
-        seed=seed, _materialize=_materialize, overlay=ov,
-        qnorm=qn, cnorm=cn, _materialize_final=_materialize_final,
+        seed=seed, _materialize=_materialize,
+        _materialize_final=_materialize_final,
     )
 
 

@@ -58,9 +58,11 @@ def train_linear_classifier(
 ) -> DataFrame:
     """Fit logistic regression on hashed unigram+bigram counts.
 
-    ``label_col`` must be 0/1 (int). Returns the trained model as a
-    ``(b, w_micro)`` frame — bucket −1 is the bias — ready to broadcast
-    into a scoring join (:func:`score_with_model`).
+    ``label_col`` must be 0/1 (int) and ``id_col`` must be unique per
+    document: a repeated id fans out through the labels join and would
+    inflate N, so it raises ``ValueError``. Returns the trained model
+    as a ``(b, w_micro)`` frame — bucket −1 is the bias — ready to
+    broadcast into a scoring join (:func:`score_with_model`).
     """
     spark = docs.sparkSession
     fb = _feature_buckets(docs, n_buckets, text_col, id_col)
@@ -85,8 +87,19 @@ def train_linear_classifier(
     # job referenced x six times (2 per iteration), so concurrent
     # stages could each recompute the O(corpus-features) subtree
     # before the cache was populated; now the iterations are
-    # guaranteed to read cached rows.
-    n_docs = float(x.where(F.col("b") == -1).count())
+    # guaranteed to read cached rows. The same action counts distinct
+    # ids: the two differ only when an id repeats.
+    n_rows, n_ids = x.where(F.col("b") == -1).agg(
+        F.count("*"), F.countDistinct(id_col)
+    ).first()
+    if n_rows != n_ids:
+        x.unpersist()
+        raise ValueError(
+            f"train_linear_classifier: {id_col!r} is not unique "
+            f"({n_ids} distinct ids over {n_rows} bias rows after the "
+            f"labels join)"
+        )
+    n_docs = float(n_rows)
 
     w = spark.range(-1, n_buckets).select(
         F.col("id").alias("b"), F.lit(0).cast("bigint").alias("w_micro")
