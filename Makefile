@@ -41,4 +41,4 @@ nightly-example:
 	python examples/nightly_snapshot.py
 
 smoke:
-	python -m pytest tests/test_engine_udf.py tests/test_ddl.py -q
+	python -m pytest tests/test_engine_udf.py tests/test_ddl.py tests/test_wasm_guest.py -q

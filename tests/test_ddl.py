@@ -116,5 +116,6 @@ def test_parse_type(name, expected):
 
 
 def test_parse_type_unknown():
-    with pytest.raises(FunctionDefinitionError):
-        parse_type("GEOMETRY")
+    for name in ("GEOMETRY", "MAP<INT, INT, INT>"):
+        with pytest.raises(FunctionDefinitionError):
+            parse_type(name)

@@ -160,6 +160,84 @@ def test_create_or_replace(engine):
     assert engine.module_cache_size() == 0
 
 
+def test_edited_module_is_reloaded(engine, tmp_path):
+    # A guest file edited at the same path runs its new code after a
+    # DROP + CREATE and after a CREATE OR REPLACE: the module cache is
+    # keyed by the path plus a version taken from the file at CREATE.
+    mod = tmp_path / "g.py"
+    head = "import pyarrow.compute as pc\n\n"
+    mod.write_text(head + "def g(args):\n    return pc.multiply(args[0], 2.0)\n")
+
+    def create(name, method, replace=""):
+        engine.sql(
+            f"CREATE {replace}FUNCTION {name}(DOUBLE) RETURNS DOUBLE "
+            f"AS '{mod}!{method}'"
+        )
+
+    def call(name):
+        [row] = engine.sql(f"select {name}(1.0D) as v").collect()
+        return row["v"]
+
+    create("g", "g")
+    assert call("g") == 2.0
+    engine.sql("DROP FUNCTION g")
+    assert engine.module_cache_size() == 0
+    mod.write_text(
+        head + "def g(args):\n    return pc.add(args[0], 100.0)\n"
+        "\n"
+        "def h(args):\n    return pc.subtract(args[0], 100.0)\n"
+    )
+    create("g", "g")
+    assert call("g") == 101.0
+    create("h", "h")  # a symbol the edit added passes CREATE validation
+    assert call("h") == -99.0
+    assert engine.module_cache_size() == 1
+    mod.write_text(head + "def g(args):\n    return pc.add(args[0], 1000.0)\n")
+    create("g", "g", replace="OR REPLACE ")
+    assert call("g") == 1001.0
+    engine.sql("DROP FUNCTION g")
+    engine.sql("DROP FUNCTION h")
+    assert engine.module_cache_size() == 0
+
+
+def test_registered_function_ships_by_value(engine, monkeypatch, tmp_path):
+    # The registered function is pickled by value: a process that cannot
+    # import the package unpickles it and runs the .py guest.
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+    from pyspark.sql.udf import UDFRegistration
+
+    registered = {}
+    original = UDFRegistration.register
+
+    def recording(self, name, f, *args, **kwargs):
+        registered[name] = f
+        return original(self, name, f, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "register", recording)
+    create_f1(engine)
+    blob = tmp_path / "f1.pickle"
+    blob.write_bytes(cloudpickle.dumps(registered["f1"].func))
+    script = (
+        "import os, pickle, sys\n"
+        "sys.modules['wasaffi_spark'] = None\n"
+        "assert not any(os.path.isdir(os.path.join(p or '.', 'wasaffi_spark'))"
+        " for p in sys.path), sys.path\n"
+        "import pyarrow as pa\n"
+        f"fn = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
+        "print(fn(pa.array([2.0, 3.0]), pa.array([2.0, 3.0])).to_pylist())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip() == "[4.0, 27.0]"
+
+
 def test_language_dispatch(spark):
     """The reference ignores LANGUAGE (lib.rs:33-64); we additionally
     support a language→factory map, defaulting everything else to the

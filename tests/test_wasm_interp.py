@@ -14,36 +14,21 @@ import struct
 
 import pytest
 
+from tests.wasm_encoding import section, uleb
 from wasaffi_spark.wasm_interp import Instance, Trap, parse_module
-
-
-def _uleb(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _section(sid: int, body: bytes) -> bytes:
-    return bytes([sid]) + _uleb(len(body)) + body
 
 
 def _module(param_types: bytes, result_types: bytes, body: bytes,
             n_locals_i32: int = 0, extra_sections: bytes = b"") -> Instance:
     """One-function module: (params) -> (results) with the given raw body."""
-    ftype = b"\x60" + _uleb(len(param_types)) + param_types + _uleb(len(result_types)) + result_types
-    types = _section(1, b"\x01" + ftype)
-    funcs = _section(3, b"\x01\x00")
-    mem = _section(5, b"\x01\x00\x01")  # 1 page, no max
-    exports = _section(7, b"\x01" + _uleb(1) + b"f" + b"\x00\x00")
-    locals_decl = (b"\x01" + _uleb(n_locals_i32) + b"\x7f") if n_locals_i32 else b"\x00"
+    ftype = b"\x60" + uleb(len(param_types)) + param_types + uleb(len(result_types)) + result_types
+    types = section(1, b"\x01" + ftype)
+    funcs = section(3, b"\x01\x00")
+    mem = section(5, b"\x01\x00\x01")  # 1 page, no max
+    exports = section(7, b"\x01" + uleb(1) + b"f" + b"\x00\x00")
+    locals_decl = (b"\x01" + uleb(n_locals_i32) + b"\x7f") if n_locals_i32 else b"\x00"
     code_body = locals_decl + body + b"\x0b"
-    code = _section(10, b"\x01" + _uleb(len(code_body)) + code_body)
+    code = section(10, b"\x01" + uleb(len(code_body)) + code_body)
     blob = b"\0asm\x01\0\0\0" + types + funcs + mem + extra_sections + exports + code
     return Instance(parse_module(blob))
 

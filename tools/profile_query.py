@@ -5,7 +5,11 @@ For each named query (default: the bench's slowest), reports:
   - construct_s : wall time of fn(spark, sf_dir) — driver-side plan
                   construction, INCLUDING any eager controller collects
   - exec_s      : wall time of the noop-sink write (guide §1.4)
-  - jobs/stages/tasks : Spark scheduler counts for the timed region
+  - jobs/stages/tasks : Spark scheduler counts for the timed region:
+                  the jobs started, each stage of those jobs that ran
+                  tasks counted once (a stage shared between jobs, or
+                  skipped because its shuffle output existed, adds
+                  nothing), and the tasks those stages completed
 and writes .explain("formatted") to plans/r13/<name>_<tag>.txt.
 
 Usage: python tools/profile_query.py [--tag before|after] [--sf DIR] q1 q2 ...
@@ -43,6 +47,10 @@ def main() -> None:
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "true" if "--rest" in sys.argv else "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # keep every job and stage of the session in the status store, so
+        # a query's counts do not depend on the queries profiled before it
+        .config("spark.ui.retainedJobs", "1000000")
+        .config("spark.ui.retainedStages", "1000000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -77,19 +85,22 @@ def main() -> None:
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
+            # the status store is fed by the listener bus: drain it first
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
             jobs1 = st.getJobIdsForGroup(None) or []
             new_jobs = sorted(set(jobs1) - set(jobs0))
-            n_stages = 0
-            n_tasks = 0
+            stage_ids: set[int] = set()
             for j in new_jobs:
                 ji = st.getJobInfo(j)
-                if ji is None:
-                    continue
-                for sid in ji.stageIds:
-                    si = st.getStageInfo(sid)
-                    if si is not None:
-                        n_stages += 1
-                        n_tasks += si.numTasks
+                if ji is not None:
+                    stage_ids.update(ji.stageIds)
+            n_stages = 0
+            n_tasks = 0
+            for sid in stage_ids:
+                si = st.getStageInfo(sid)
+                if si is not None and si.numCompletedTasks > 0:
+                    n_stages += 1
+                    n_tasks += si.numCompletedTasks
             row = dict(
                 run=i,
                 construct_s=round(t1 - t0, 3),

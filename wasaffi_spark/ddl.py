@@ -127,25 +127,16 @@ def parse_type(name: str) -> T.DataType:
         return T.ArrayType(parse_type(m.group(1)))
     m = _MAP_RE.match(s)
     if m:
-        k, v = _split_top_level(m.group(1))
-        return T.MapType(parse_type(k), parse_type(v))
+        params = _split_args(m.group(1))
+        if len(params) != 2:
+            raise FunctionDefinitionError(
+                f"expected two type parameters in {name!r}"
+            )
+        return T.MapType(parse_type(params[0]), parse_type(params[1]))
     dt = _SIMPLE_TYPES.get(s.upper())
     if dt is None:
         raise FunctionDefinitionError(f"unsupported type in function DDL: {name!r}")
     return dt
-
-
-def _split_top_level(s: str) -> tuple[str, str]:
-    """Split ``K, V`` at the top-level comma (ignoring nested ``<>``/``()``)."""
-    depth = 0
-    for i, ch in enumerate(s):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            return s[:i], s[i + 1 :]
-    raise FunctionDefinitionError(f"expected two type parameters in {s!r}")
 
 
 def _split_args(s: str) -> list[str]:

@@ -8,12 +8,13 @@ at the driver and (b) lazily load + call the function inside executor
 Python workers.
 
 One factory serves both backends (SURVEY §7.0):
-:class:`PythonModuleFunctionFactory` resolves ``'path/mod.py!fn'`` by
+:class:`PythonModuleFunctionFactory` resolves ``'path/mod.py!fn'`` (a
 dynamic import, the native analog of "load external module, bind
-exported symbol" (lib.rs:111-132), and ``'path/mod.wasm!fn'`` through
-``udf_runtime``'s loader, which runs the module with wasmtime when it
-is importable and with the bundled pure-Python interpreter
-(``wasm_interp``) otherwise (see ``wasm_backend.WasmModule``).
+exported symbol", lib.rs:111-132) and ``'path/mod.wasm!fn'`` (run with
+wasmtime when it is importable and with the bundled pure-Python
+interpreter ``wasm_interp`` otherwise, see ``wasm_backend.WasmModule``)
+through ``udf_runtime``'s one guest loader, and records the file's
+version token, so the spec names the module exactly as it was at CREATE.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from dataclasses import dataclass
 from typing import Protocol
 
 from .ddl import CreateFunctionStmt, split_definition
-from .udf_runtime import get_function, resolve_module_path
+from .udf_runtime import get_function, module_version, resolve_module_path
 
 
 @dataclass(frozen=True)
@@ -33,11 +34,12 @@ class FunctionSpec:
     module_path: str  # resolved, absolute
     method: str
     stmt: CreateFunctionStmt
+    version: str  # udf_runtime.module_version of the file at CREATE
 
     @property
-    def module_key(self) -> str:
-        """Cache key for the module registry (≙ path key, lib.rs:20)."""
-        return self.module_path
+    def module_key(self) -> tuple[str, str]:
+        """The loader's cache key (≙ path key, lib.rs:20, plus version)."""
+        return self.module_path, self.version
 
 
 class FunctionFactory(Protocol):
@@ -63,7 +65,8 @@ class PythonModuleFunctionFactory:
     def create(self, stmt: CreateFunctionStmt) -> FunctionSpec:
         module, method = split_definition(stmt.definition)
         resolved = resolve_module_path(module, self._roots)
+        version = module_version(resolved)
         # Driver-side validation: load once and check the symbol exists
         # (the executor re-loads lazily into its own process cache).
         get_function(resolved, method)
-        return FunctionSpec(stmt.name, resolved, method, stmt)
+        return FunctionSpec(stmt.name, resolved, method, stmt, version)

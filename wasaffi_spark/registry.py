@@ -1,14 +1,15 @@
-"""Driver-side function/module registry.
+"""Driver-side function registry.
 
-≙ the reference's weak-valued module cache plus the session function
-registry (/root/reference/wasmedge_factory/src/lib.rs:20,79-100): a module
-stays "loaded" (driver-side) while at least one registered function
-references it, and is evicted when the last such function is dropped —
-the exact contract pinned by ``should_create_drop_function``
-(lib.rs:310-375: two functions of one module ⇒ cache size 1; drop both ⇒
-cache size 0). Python has no reliable weak-value semantics for this
-(executor caches are process-lifetime anyway), so the registry refcounts
-module keys explicitly.
+≙ the reference's session function registry plus the live-module count
+of its weak-valued module cache
+(/root/reference/wasmedge_factory/src/lib.rs:20,79-100): a module counts
+as loaded while at least one registered function references it, and
+stops counting when the last such function is dropped — the contract
+pinned by ``should_create_drop_function`` (lib.rs:310-375: two functions
+of one module ⇒ cache size 1; drop both ⇒ cache size 0). The count is
+derived from the registered specs' module keys (path plus version), so
+it needs no state of its own; the modules themselves live in
+``udf_runtime``'s loader cache.
 """
 
 from __future__ import annotations
@@ -20,24 +21,15 @@ from .factory import FunctionSpec
 class FunctionRegistry:
     def __init__(self) -> None:
         self._functions: dict[str, FunctionSpec] = {}
-        self._module_refs: dict[str, int] = {}
 
     def register(self, spec: FunctionSpec) -> None:
-        if spec.name in self._functions:
-            # Spark's udf.register overwrites; keep refcounts consistent.
-            self.drop(spec.name)
+        # Spark's udf.register overwrites; so does the registry.
         self._functions[spec.name] = spec
-        self._module_refs[spec.module_key] = self._module_refs.get(spec.module_key, 0) + 1
 
     def drop(self, name: str) -> FunctionSpec:
         spec = self._functions.pop(name, None)
         if spec is None:
             raise WasmFunctionError(f"function {name!r} is not registered")
-        refs = self._module_refs.get(spec.module_key, 0) - 1
-        if refs <= 0:
-            self._module_refs.pop(spec.module_key, None)
-        else:
-            self._module_refs[spec.module_key] = refs
         return spec
 
     def get(self, name: str) -> FunctionSpec | None:
@@ -52,4 +44,4 @@ class FunctionRegistry:
     def cache_size(self) -> int:
         """Number of live (referenced) modules — the quantity the
         reference test asserts (lib.rs:344-345, 363-372)."""
-        return len(self._module_refs)
+        return len({spec.module_key for spec in self._functions.values()})

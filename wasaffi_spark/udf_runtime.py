@@ -1,4 +1,4 @@
-"""Executor-side function runtime.
+"""Guest loading and the executor-side function runtime.
 
 This module is the Spark analog of the reference's host↔WASM invocation
 path (/root/reference/wasmedge_factory/src/udf.rs:82-115): Spark itself
@@ -8,10 +8,17 @@ the reference hand-rolls (README.md:76). Functions run as scalar
 ``pa.Array``s Spark sent and the guest's ``pa.Array`` goes back as is,
 with no pandas conversion on either side. What remains here is
 
-- the per-worker-process module cache (≙ the factory's weak-valued VM
-  cache, /root/reference/wasmedge_factory/src/lib.rs:79-100 — Python
-  workers are reused across batches via ``spark.python.worker.reuse``, so
-  a process-global dict amortizes module loads exactly like the VM cache),
+- the one guest loader and its process-global module cache
+  (≙ the factory's weak-valued VM cache,
+  /root/reference/wasmedge_factory/src/lib.rs:79-100). Every load, on
+  the driver (CREATE-time validation, :func:`load_module`,
+  :func:`get_function`) and in the executor's UDF closure, goes through
+  the loader :func:`_guest_loader` builds. The cache is keyed by the
+  resolved path plus a version token, a hash of the file's bytes that
+  the driver takes at CREATE time (:func:`module_version`): a file
+  edited at the same path is loaded afresh by the next CREATE, and
+  Python workers, reused across batches via
+  ``spark.python.worker.reuse``, load each version once;
 - input coercion to the declared argument types (≙ ``Signature::exact``,
   udf.rs:54 — DataFusion's analyzer casts call sites; Spark doesn't
   type-check Python UDF args, so we cast per-batch in pyarrow),
@@ -20,17 +27,16 @@ with no pandas conversion on either side. What remains here is
 - the error protocol (``[Wasm Invocation] …`` / ``[Wasm Invocation Panic]
   …``, udf.rs:95,111-113).
 
-Everything here must be importable on executors; in local mode that is
-automatic, on a real cluster the package ships via ``--py-files`` and
-function modules via ``SparkContext.addFile`` (SURVEY §7.5.5).
+The UDF closure ships by value (see :func:`build_pandas_udf`); on a real
+cluster function modules reach the workers via ``SparkContext.addFile``
+(SURVEY §7.5.5).
 """
 
 from __future__ import annotations
 
-import importlib.util
+import hashlib
 import os
 import sys
-import threading
 from collections.abc import Callable, Sequence
 from typing import Any
 
@@ -41,10 +47,8 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from .errors import ModuleLoadError
 
-# Process-global module cache keyed by resolved path. One per worker
-# process; lives for the worker's lifetime (workers are reused).
-_MODULE_CACHE: dict[str, Any] = {}
-_CACHE_LOCK = threading.Lock()
+# Name prefix of the cached guest modules in ``sys.modules``.
+_CACHE_PREFIX = "_wasaffi_guest_"
 
 
 def resolve_module_path(path: str, roots: Sequence[str] = ()) -> str:
@@ -75,54 +79,110 @@ def resolve_module_path(path: str, roots: Sequence[str] = ()) -> str:
     raise ModuleLoadError(f"function module not found: {path!r} (tried {candidates})")
 
 
+def module_version(path: str) -> str:
+    """The version token of a guest file: the SHA-256 of its bytes."""
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
+
+
+def _guest_loader() -> Callable[..., Any]:
+    """Build the guest loader.
+
+    It is returned as a closure so that cloudpickle ships it by value
+    inside each UDF: it needs only the stdlib, plus the package for
+    ``.wasm`` modules, imported from this package's root (captured here)
+    when the worker's path lacks it, as a local-mode worker's may. Its
+    cache is ``sys.modules``, the one process-global table such a
+    closure reaches in every process; a failed load caches nothing.
+    Where the loader itself cannot load (no import spec, no such
+    callable in a ``.py`` module) it raises ``ImportError``.
+    """
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def load(path: str, version: str, method: str | None) -> Any:
+        """Return ``method`` of the guest module at ``path``, or the module
+        itself for ``None``, loading it once per ``(path, version)``."""
+        import hashlib
+        import importlib.util
+        import os
+        import sys
+
+        if not os.path.exists(path):  # cluster: shipped via SparkContext.addFile
+            try:
+                from pyspark import SparkFiles
+
+                shipped = SparkFiles.get(os.path.basename(path))
+            except Exception:
+                shipped = path
+            if os.path.exists(shipped):
+                path = shipped
+        is_wasm = path.endswith(".wasm")
+        key = _CACHE_PREFIX + hashlib.sha256(f"{path}\0{version}".encode()).hexdigest()
+        mod = sys.modules.get(key)
+        if mod is None:
+            if is_wasm:
+                try:
+                    from wasaffi_spark.wasm_backend import WasmModule
+                except ImportError:
+                    sys.path.append(pkg_root)
+                    from wasaffi_spark.wasm_backend import WasmModule
+                mod = sys.modules[key] = WasmModule(path)
+            else:
+                spec = importlib.util.spec_from_file_location(key, path)
+                if spec is None or spec.loader is None:
+                    raise ImportError(f"cannot import function module: {path}")
+                mod = importlib.util.module_from_spec(spec)
+                sys.modules[key] = mod  # visible to the module while it runs
+                try:
+                    spec.loader.exec_module(mod)
+                except BaseException:
+                    del sys.modules[key]
+                    raise
+        if method is None:
+            return mod
+        if is_wasm:
+            return mod.get_udf(method)
+        fn = getattr(mod, method, None)
+        if not callable(fn):
+            raise ImportError(f"module {path!r} does not export a callable {method!r}")
+        return fn
+
+    return load
+
+
+_load = _guest_loader()
+
+
+def _load_current(path: str, method: str | None) -> Any:
+    try:
+        return _load(path, module_version(path), method)
+    except (ImportError, OSError) as e:
+        raise ModuleLoadError(str(e)) from e
+
+
 def load_module(resolved_path: str) -> Any:
-    """Load (with process-global caching) a function module from a path.
+    """Load the module at ``resolved_path`` as it is on disk now, through
+    the guest loader and its cache.
 
     ≙ ``wasm_model_cache_or_load`` (/root/reference/wasmedge_factory/src/lib.rs:79-100).
     ``.py`` modules load via importlib; ``.wasm`` modules load through
     :mod:`wasaffi_spark.wasm_backend` (wasmtime when importable, else
     the bundled pure-Python interpreter).
     """
-    with _CACHE_LOCK:
-        mod = _MODULE_CACHE.get(resolved_path)
-        if mod is not None:
-            return mod
-        if resolved_path.endswith(".wasm"):
-            from . import wasm_backend
-
-            mod = wasm_backend.WasmModule(resolved_path)
-        else:
-            name = "_wasaffi_udf_" + os.path.basename(resolved_path).replace(".", "_")
-            spec = importlib.util.spec_from_file_location(name, resolved_path)
-            if spec is None or spec.loader is None:
-                raise ModuleLoadError(f"cannot import module: {resolved_path}")
-            mod = importlib.util.module_from_spec(spec)
-            sys.modules[name] = mod
-            spec.loader.exec_module(mod)
-        _MODULE_CACHE[resolved_path] = mod
-        return mod
+    return _load_current(resolved_path, None)
 
 
 def get_function(resolved_path: str, method: str) -> Callable[[list[pa.Array]], pa.Array]:
-    mod = load_module(resolved_path)
-    if hasattr(mod, "get_udf"):  # wasm backend exposes a lookup
-        return mod.get_udf(method)
-    fn = getattr(mod, method, None)
-    if fn is None or not callable(fn):
-        raise ModuleLoadError(
-            f"module {resolved_path!r} does not export a callable {method!r}"
-        )
-    return fn
-
-
-def executor_cache_size() -> int:
-    """Visible for tests (≙ cache assertions, lib.rs:344-372)."""
-    return len(_MODULE_CACHE)
+    """The guest function ``method`` of the module at ``resolved_path``;
+    raises :class:`ModuleLoadError` when it cannot be loaded."""
+    return _load_current(resolved_path, method)
 
 
 def clear_executor_cache() -> None:
-    with _CACHE_LOCK:
-        _MODULE_CACHE.clear()
+    """Drop every cached guest module of this process."""
+    for key in list(sys.modules):
+        if key.startswith(_CACHE_PREFIX):
+            sys.modules.pop(key, None)
 
 
 def build_pandas_udf(
@@ -149,70 +209,25 @@ def build_pandas_udf(
     runtime (observable in the reference's error tests, lib.rs:229).
 
     The inner function is deliberately **self-contained** (stdlib +
-    pyarrow only, with ``sys.modules`` as the per-worker-process module
-    cache): cloudpickle ships it by value, so executors do NOT need
-    ``wasaffi_spark`` on their python path. This is what makes the engine
-    work unmodified on a real multi-node cluster where only the function
-    module (via ``SparkContext.addFile``) reaches the workers
-    (SURVEY §7.5.5). Exception: ``.wasm`` modules additionally need the
-    package (for :mod:`wasaffi_spark.wasm_backend`) shipped via
-    ``--py-files``.
+    pyarrow, and the guest loader, itself a closure): cloudpickle ships
+    it by value, so executors do NOT need ``wasaffi_spark`` on their
+    python path. This is what makes the engine work unmodified on a real
+    multi-node cluster where only the function module (via
+    ``SparkContext.addFile``) reaches the workers (SURVEY §7.5.5).
+    Exception: ``.wasm`` modules additionally need the package (for
+    :mod:`wasaffi_spark.wasm_backend`) shipped via ``--py-files``.
+    The closure carries the module's version token, taken from the file
+    now, at CREATE time.
     """
     arrow_arg_types = [to_arrow_type(t) for t in arg_types]
     arrow_ret = to_arrow_type(return_type)
-    is_wasm = module_path.endswith(".wasm")
-    # Captured by value into the closure: lets a local-mode executor (or
-    # any worker sharing the driver's filesystem) import the package even
-    # when the driver process found it via a sys.path entry the workers
-    # don't inherit. On a real cluster this path won't exist and the
-    # normal --py-files import is used instead.
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    version = module_version(module_path)
+    load = _load
 
     def _invoke(*cols: pa.Array) -> pa.Array:
-        import hashlib
-        import importlib.util
-        import os
-        import sys
-
         import pyarrow as _pa
 
-        # -- per-process module cache, keyed through sys.modules
-        #    (≙ wasm_model_cache_or_load, lib.rs:79-100; Python workers are
-        #    reused, so this amortizes loads exactly like the VM cache)
-        path = module_path
-        if not os.path.exists(path):  # cluster: shipped via addFile
-            try:
-                from pyspark import SparkFiles
-
-                cand = SparkFiles.get(os.path.basename(path))
-                if os.path.exists(cand):
-                    path = cand
-            except Exception:
-                pass
-        if is_wasm:
-            try:
-                from wasaffi_spark.udf_runtime import load_module
-            except ImportError:
-                if os.path.isdir(os.path.join(pkg_root, "wasaffi_spark")):
-                    sys.path.insert(0, pkg_root)
-                from wasaffi_spark.udf_runtime import load_module
-
-            fn = load_module(path).get_udf(method)
-        else:
-            modname = "_wasaffi_udf_" + hashlib.md5(path.encode()).hexdigest()
-            mod = sys.modules.get(modname)
-            if mod is None:
-                spec = importlib.util.spec_from_file_location(modname, path)
-                if spec is None or spec.loader is None:
-                    raise RuntimeError(f"cannot import function module: {path}")
-                mod = importlib.util.module_from_spec(spec)
-                sys.modules[modname] = mod
-                spec.loader.exec_module(mod)
-            fn = getattr(mod, method, None)
-            if fn is None or not callable(fn):
-                raise RuntimeError(
-                    f"module {path!r} does not export a callable {method!r}"
-                )
+        fn = load(module_path, version, method)
 
         # -- exact-signature arity + coercion (≙ Signature::exact,
         #    udf.rs:54). Spark does not arity-check Python UDF calls, so

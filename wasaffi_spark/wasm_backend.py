@@ -13,7 +13,9 @@ the production UDF path remains the Arrow-vectorized ``.py`` backend.
 
 wasmedge-bindgen calling convention (verified EMPIRICALLY against the
 reference's prebuilt guest, not assumed — see
-tests/test_wasm_artifact.py::test_e2e_golden_values):
+tests/test_wasm_backend.py::test_e2e_golden_values; the default test
+path runs it on the in-repo guest of tests/test_wasm_guest.py), written
+once in :meth:`WasmModule._call`:
 
 - host: ``buf = allocate(len(payload))``; write payload at ``buf``
   (the guest takes ownership of ``buf`` — it is freed guest-side, so a
@@ -69,49 +71,25 @@ def unpack_result(payload: bytes) -> pa.Array:
 class _InterpRuntime:
     """Pure-Python interpreter runtime (always available)."""
 
-    trap_type = None  # set in __init__
-
     def __init__(self, path: str):
         from . import wasm_interp
 
         self.trap_type = wasm_interp.Trap
         try:
-            module = wasm_interp.parse_module(open(path, "rb").read())
-            self.inst = wasm_interp.Instance(module)
+            with open(path, "rb") as f:
+                self.inst = wasm_interp.Instance(wasm_interp.parse_module(f.read()))
         except (wasm_interp.WasmError, OSError) as e:
             raise ModuleLoadError(f"cannot load {path!r}: {e}") from e
-        self.exports = set(self.inst.exports)
-        self.has_memory = self.inst.m.has_memory
+        self.invoke = self.inst.invoke
+        self.read = self.inst.read_mem
+        self.write = self.inst.write_mem
 
-    def call(self, symbol: str, payload: bytes):
-        inst = self.inst
-        buf = inst.invoke("allocate", len(payload))
-        inst.write_mem(buf, payload)
-        params = inst.invoke("allocate", 8)
-        inst.write_mem(params, struct.pack("<II", buf, len(payload)))
-        try:
-            ret = inst.invoke(symbol, params, 1)
-        finally:
-            inst.invoke("deallocate", params, 8)
-        # Read then FREE everything the guest handed back: the module is
-        # cached for the worker's lifetime and called once per Arrow
-        # batch, so unfreed result buffers grow linear memory until
-        # allocate fails.  (Rust's wasm dlmalloc ignores the size arg of
-        # dealloc, so the len/cap distinction below is belt-and-braces.)
-        status = inst.read_mem(ret, 1)[0]
-        p1, p2 = struct.unpack("<II", inst.read_mem(ret + 1, 8))
-        try:
-            if status != 0:
-                out = inst.read_mem(p1, p2).decode("utf-8", errors="replace")
-                inst.invoke("deallocate", p1, p2)
-                return out
-            vptr, _tag, vlen, vcap = struct.unpack("<4I", inst.read_mem(p1, 16))
-            out = inst.read_mem(vptr, vlen)
-            inst.invoke("deallocate", vptr, vcap)
-            inst.invoke("deallocate", p1, p2 * 16)
-            return out
-        finally:
-            inst.invoke("deallocate", ret, 9)
+    def has(self, name: str) -> bool:
+        if name == "memory":
+            # The memory section is optional in a valid module; the ABI
+            # requires one, so check the parsed module itself.
+            return self.inst.m.has_memory
+        return name in self.inst.exports
 
 
 class _WasmtimeRuntime:
@@ -122,52 +100,21 @@ class _WasmtimeRuntime:
 
         self.trap_type = wasmtime.Trap
         engine = wasmtime.Engine()
-        module = wasmtime.Module.from_file(engine, path)
         self.store = wasmtime.Store(engine)
-        self.instance = wasmtime.Instance(self.store, module, [])
-        ex = self.instance.exports(self.store)
-        self._mem = ex.get("memory")
-        self._allocate = ex.get("allocate")
-        self._deallocate = ex.get("deallocate")
-        self._ex = ex
-        self.exports = set()
-        try:
-            self.exports = {k for k in ex}  # wasmtime exposes mapping-ish
-        except TypeError:
-            pass
+        module = wasmtime.Module.from_file(engine, path)
+        self._ex = wasmtime.Instance(self.store, module, []).exports(self.store)
 
     def has(self, name: str) -> bool:
         return self._ex.get(name) is not None
 
-    def call(self, symbol: str, payload: bytes):
-        store, mem = self.store, self._mem
-        fn = self._ex.get(symbol)
-        buf = self._allocate(store, len(payload))
-        mem.write(store, payload, buf)
-        params = self._allocate(store, 8)
-        mem.write(store, struct.pack("<II", buf, len(payload)), params)
-        try:
-            ret = fn(store, params, 1)
-        finally:
-            self._deallocate(store, params, 8)
-        head = bytes(mem.read(store, ret, ret + 9))
-        status = head[0]
-        p1, p2 = struct.unpack("<II", head[1:9])
-        try:
-            if status != 0:
-                out = bytes(mem.read(store, p1, p1 + p2)).decode(
-                    "utf-8", errors="replace"
-                )
-                self._deallocate(store, p1, p2)
-                return out
-            desc = bytes(mem.read(store, p1, p1 + 16))
-            vptr, _tag, vlen, vcap = struct.unpack("<4I", desc)
-            out = bytes(mem.read(store, vptr, vptr + vlen))
-            self._deallocate(store, vptr, vcap)
-            self._deallocate(store, p1, p2 * 16)
-            return out
-        finally:
-            self._deallocate(store, ret, 9)
+    def invoke(self, name: str, *args: int):
+        return self._ex[name](self.store, *args)
+
+    def read(self, ptr: int, n: int) -> bytes:
+        return bytes(self._ex["memory"].read(self.store, ptr, ptr + n))
+
+    def write(self, ptr: int, data: bytes) -> None:
+        self._ex["memory"].write(self.store, data, ptr)
 
 
 class WasmModule:
@@ -175,7 +122,9 @@ class WasmModule:
 
     Mirrors ``VmDock`` usage (/root/reference/wasmedge_factory/src/lib.rs:124-129):
     one engine/store/instance per module per worker process, cached by
-    :mod:`wasaffi_spark.udf_runtime`.
+    :mod:`wasaffi_spark.udf_runtime`. The runtime underneath supplies
+    only ``invoke``/``read``/``write``/``has``; the bindgen call
+    sequence is :meth:`_call`, written once for both.
     """
 
     def __init__(self, path: str):
@@ -193,35 +142,53 @@ class WasmModule:
         # non-conforming module fails with ModuleLoadError at CREATE
         # FUNCTION, not with a raw error at first invoke.
         for required in ("memory", "allocate", "deallocate"):
-            if not self._has_export(required):
+            if not self._rt.has(required):
                 raise ModuleLoadError(
                     f"wasm module {path!r} does not export {required!r} "
                     "(wasmedge-bindgen ABI required)"
                 )
 
-    def _has_export(self, name: str) -> bool:
-        rt = self._rt
-        if isinstance(rt, _InterpRuntime):
-            if name == "memory":
-                # The memory section is optional in a valid module; the
-                # ABI requires one, so check the parsed module itself.
-                return rt.has_memory
-            return name in rt.exports
-        return rt.has(name)
-
     def get_udf(self, method: str) -> Callable[[list[pa.Array]], pa.Array]:
         symbol = GUEST_PREFIX + method  # ≙ udf.rs:52
-        if not self._has_export(symbol):
+        if not self._rt.has(symbol):
             raise ModuleLoadError(f"wasm module does not export {symbol!r}")
 
         def call(arrays: list[pa.Array]) -> pa.Array:
-            payload = pack_arrays(arrays)
             try:
-                out = self._rt.call(symbol, payload)
+                out = self._call(symbol, pack_arrays(arrays))
             except self._rt.trap_type as e:  # guest panic/trap (≙ udf.rs:95)
                 raise WasmInvocationPanic(str(e)) from e
-            if isinstance(out, str):  # guest returned Err(String)
-                raise WasmInvocationError(out)
             return unpack_result(out)
 
         return call
+
+    def _call(self, symbol: str, payload: bytes) -> bytes:
+        """One wasmedge-bindgen call (module docstring): the result bytes,
+        or :class:`WasmInvocationError` carrying the guest's ``Err``."""
+        rt = self._rt
+        buf = rt.invoke("allocate", len(payload))
+        rt.write(buf, payload)
+        params = rt.invoke("allocate", 8)
+        rt.write(params, struct.pack("<II", buf, len(payload)))
+        try:
+            ret = rt.invoke(symbol, params, 1)
+        finally:
+            rt.invoke("deallocate", params, 8)
+        # Read then FREE everything the guest handed back: the module is
+        # cached for the worker's lifetime and called once per Arrow
+        # batch, so unfreed result buffers grow linear memory until
+        # allocate fails.  (Rust's wasm dlmalloc ignores the size arg of
+        # dealloc, so the len/cap distinction below is belt-and-braces.)
+        status, p1, p2 = struct.unpack("<BII", rt.read(ret, 9))
+        try:
+            if status != 0:
+                message = rt.read(p1, p2).decode("utf-8", errors="replace")
+                rt.invoke("deallocate", p1, p2)
+                raise WasmInvocationError(message)
+            vptr, _tag, vlen, vcap = struct.unpack("<4I", rt.read(p1, 16))
+            out = rt.read(vptr, vlen)
+            rt.invoke("deallocate", vptr, vcap)
+            rt.invoke("deallocate", p1, p2 * 16)
+            return out
+        finally:
+            rt.invoke("deallocate", ret, 9)
