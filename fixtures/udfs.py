@@ -74,3 +74,10 @@ def f_panic(args: list[pa.Array]) -> pa.Array:
     """≙ guest ``f_panic`` (wasm_function/src/lib.rs:64-66, trap path —
     test ignored upstream, lib.rs:265-308)."""
     raise PanicError("unreachable")
+
+
+def batch_len(args: list[pa.Array]) -> pa.Array:
+    """The length of the batch this call received, on every row — makes
+    the Arrow batches Spark sends across the boundary visible from SQL."""
+    n = len(args[0])
+    return pa.array([n] * n, pa.int64())

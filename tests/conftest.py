@@ -31,6 +31,33 @@ def spark():
 
 
 @pytest.fixture()
+def recommended_sql_confs() -> dict[str, str]:
+    """The ``spark.sql.*`` options ``conf.recommended_builder`` sets."""
+    from wasaffi_spark.conf import recommended_builder
+
+    options = recommended_builder()._options
+    return {k: v for k, v in options.items() if k.startswith("spark.sql.")}
+
+
+@pytest.fixture()
+def recommended_posture(spark, recommended_sql_confs):
+    """Run one test under the recommended session's ``spark.sql.*``
+    options, restoring the session's own values afterwards."""
+    confs = recommended_sql_confs
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield confs
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.fixture()
 def engine(spark):
     from wasaffi_spark import Engine
 

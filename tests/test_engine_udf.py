@@ -36,6 +36,21 @@ def create_f1(engine, name="f1"):
     )
 
 
+def record_registrations(monkeypatch):
+    """A dict that collects each UDF the session registers, by name."""
+    from pyspark.sql.udf import UDFRegistration
+
+    registered = {}
+    original = UDFRegistration.register
+
+    def recording(self, name, f, *args, **kwargs):
+        registered[name] = f
+        return original(self, name, f, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "register", recording)
+    return registered
+
+
 def test_happy_path(engine):
     # ≙ should_handle_happy_path (lib.rs:174-213)
     engine.register("t", make_t(engine.spark))
@@ -207,16 +222,8 @@ def test_registered_function_ships_by_value(engine, monkeypatch, tmp_path):
     import sys
 
     from pyspark import cloudpickle
-    from pyspark.sql.udf import UDFRegistration
 
-    registered = {}
-    original = UDFRegistration.register
-
-    def recording(self, name, f, *args, **kwargs):
-        registered[name] = f
-        return original(self, name, f, *args, **kwargs)
-
-    monkeypatch.setattr(UDFRegistration, "register", recording)
+    registered = record_registrations(monkeypatch)
     create_f1(engine)
     blob = tmp_path / "f1.pickle"
     blob.write_bytes(cloudpickle.dumps(registered["f1"].func))
@@ -372,21 +379,71 @@ def test_result_cast_failure_protocol(engine):
 def test_registers_nondeterministic_arrow_udf(engine, monkeypatch):
     # CREATE FUNCTION registers a scalar Arrow UDF (Arrow arrays in and
     # out, no pandas), kept nondeterministic (≙ Volatility::Volatile).
-    from pyspark.sql.udf import UDFRegistration
     from pyspark.util import PythonEvalType
 
-    registered = {}
-    original = UDFRegistration.register
-
-    def recording(self, name, f, *args, **kwargs):
-        registered[name] = f
-        return original(self, name, f, *args, **kwargs)
-
-    monkeypatch.setattr(UDFRegistration, "register", recording)
+    registered = record_registrations(monkeypatch)
     create_f1(engine)
     udf = registered["f1"]
     assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
     assert udf.deterministic is False
+
+
+def test_create_hashes_the_guest_once(engine, monkeypatch):
+    # CREATE reads and hashes the guest file once; the validation load
+    # and the UDF closure use that version, so all three name the file
+    # as it was at one moment.
+    import inspect
+
+    from wasaffi_spark import factory, udf_runtime
+
+    calls = []
+    original_version = udf_runtime.module_version
+
+    def counting(path):
+        calls.append(path)
+        return original_version(path)
+
+    monkeypatch.setattr(udf_runtime, "module_version", counting)
+    monkeypatch.setattr(factory, "module_version", counting)
+    registered = record_registrations(monkeypatch)
+    create_f1(engine)
+    assert calls == [UDFS]
+    version = inspect.getclosurevars(registered["f1"].func).nonlocals["version"]
+    assert version == engine.registry.get("f1").version
+
+
+def test_arrow_batches_end_at_row_cap_or_byte_budget(engine, recommended_posture):
+    # Under the recommended posture an Arrow batch to the Python worker
+    # ends at 65,536 rows or at the byte budget, whichever comes first:
+    # 65,536 wide rows (64 floats each) in one partition cross in
+    # several smaller batches, a DOUBLE column of the same rows in one.
+    rows = 65536
+    engine.sql(
+        f"CREATE FUNCTION blen_v(ARRAY<FLOAT>) RETURNS BIGINT AS '{UDFS}!batch_len'"
+    )
+    engine.sql(f"CREATE FUNCTION blen_d(DOUBLE) RETURNS BIGINT AS '{UDFS}!batch_len'")
+    engine.register(
+        "batch_shape",
+        engine.spark.range(0, rows, 1, 1).selectExpr(
+            "cast(id as double) as d", "array_repeat(cast(id as float), 64) as v"
+        ),
+    )
+
+    def batches(call):
+        """{batch length: number of batches of that length}"""
+        got = engine.sql(
+            f"select n, count(*) as c from (select {call} as n from batch_shape) "
+            "group by n"
+        ).collect()
+        assert sum(r["c"] for r in got) == rows
+        return {r["n"]: r["c"] // r["n"] for r in got}
+
+    wide = batches("blen_v(v)")
+    assert sum(wide.values()) > 1, wide
+    assert max(wide) < rows, wide
+    assert batches("blen_d(d)") == {rows: 1}
+    engine.sql("DROP FUNCTION blen_v")
+    engine.sql("DROP FUNCTION blen_d")
 
 
 def test_invoke_accepts_arrow_and_pandas_arguments():

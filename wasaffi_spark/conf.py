@@ -2,8 +2,9 @@
 
 One place encoding the engine's scale posture (SCALE.md): AQE with
 partition coalescing and skew handling, Arrow transfers for every
-Python-boundary crossing, shuffle partitions sized to the core count,
-and byte-sized file splits for wide (media) rows.
+Python-boundary crossing in batches that end at a row cap or a byte
+budget, shuffle partitions sized to the core count, and byte-sized file
+splits for wide (media) rows.
 """
 
 from __future__ import annotations
@@ -47,9 +48,17 @@ def recommended_builder(
         # smaller-than-default splits: media/doc rows are wide, so 64 MiB
         # keeps a task's row batch bounded by bytes rather than row count
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
-        # fewer, larger Arrow batches across the JVM↔Python boundary
-        # (measured ~8% on the UDF hot path vs the 10k default). 64k
-        # rows ≈ 0.5 MB per double column per batch; jobs moving very
-        # wide rows (raw media payloads) through Python should lower it.
+        # An Arrow batch across the JVM↔Python-worker boundary ends at
+        # 65,536 rows or at 2 MiB, whichever comes first. The row cap
+        # means fewer, larger batches for narrow rows (measured ~8% on
+        # the UDF hot path vs the 10k default; 64k rows ≈ 0.5 MB per
+        # double column). The byte budget splits a task's wide rows
+        # (64-float lists, media payloads, documents) into several
+        # batches, so the JVM encodes the next batch while the worker
+        # runs the current one: 2 MiB is the smallest budget of a
+        # 1/2/4/8 MiB sweep that leaves two-DOUBLE batches at the row
+        # cap, and as fast as 1 MiB on 64-float rows (SCALE.md "UDF
+        # runtime").
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(2 * 1024 * 1024))
     )

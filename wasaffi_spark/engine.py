@@ -167,7 +167,8 @@ class Engine:
             )
         spec = self._factory_for(stmt.language).create(stmt)
         udf = build_pandas_udf(
-            spec.module_path, spec.method, stmt.arg_types, stmt.return_type
+            spec.module_path, spec.method, stmt.arg_types, stmt.return_type,
+            version=spec.version,
         )
         self.spark.udf.register(stmt.name, udf)
         self.registry.register(spec)

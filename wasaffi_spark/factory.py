@@ -66,7 +66,8 @@ class PythonModuleFunctionFactory:
         module, method = split_definition(stmt.definition)
         resolved = resolve_module_path(module, self._roots)
         version = module_version(resolved)
-        # Driver-side validation: load once and check the symbol exists
-        # (the executor re-loads lazily into its own process cache).
-        get_function(resolved, method)
+        # Driver-side validation: load this version once and check the
+        # symbol exists (the executor re-loads lazily into its own
+        # process cache).
+        get_function(resolved, method, version)
         return FunctionSpec(stmt.name, resolved, method, stmt, version)

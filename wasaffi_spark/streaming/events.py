@@ -362,7 +362,8 @@ def ewma_stream(
 
         s = int(state.get[0]) if state.exists else None
         # concatenate EVERY Arrow chunk first, THEN sort once: the
-        # iterator yields maxRecordsPerBatch-sized chunks, and a
+        # iterator yields chunks that end at maxRecordsPerBatch rows or
+        # maxBytesPerBatch bytes, whichever comes first, and a
         # per-chunk sort would fold events out of order whenever a
         # key's rows span chunks — silently breaking the
         # bit-identical-to-batch contract (review finding r5)

@@ -3,7 +3,11 @@
 This module is the Spark analog of the reference's host↔WASM invocation
 path (/root/reference/wasmedge_factory/src/udf.rs:82-115): Spark itself
 performs the Arrow IPC transfer, batching, and scalar→array broadcast that
-the reference hand-rolls (README.md:76). Functions run as scalar
+the reference hand-rolls (README.md:76). The guest is called once per
+Arrow batch, and a batch ends at 65,536 rows or 2 MiB, whichever comes
+first (``conf.recommended_builder``): narrow rows cross in full
+65,536-row batches, wide rows in several smaller ones that the JVM
+encodes while the worker runs the guest. Functions run as scalar
 ``arrow_udf``s, so each batch's columns reach the guest as the
 ``pa.Array``s Spark sent and the guest's ``pa.Array`` goes back as is,
 with no pandas conversion on either side. What remains here is
@@ -153,9 +157,11 @@ def _guest_loader() -> Callable[..., Any]:
 _load = _guest_loader()
 
 
-def _load_current(path: str, method: str | None) -> Any:
+def _load_current(path: str, method: str | None, version: str | None = None) -> Any:
     try:
-        return _load(path, module_version(path), method)
+        if version is None:
+            version = module_version(path)
+        return _load(path, version, method)
     except (ImportError, OSError) as e:
         raise ModuleLoadError(str(e)) from e
 
@@ -172,10 +178,13 @@ def load_module(resolved_path: str) -> Any:
     return _load_current(resolved_path, None)
 
 
-def get_function(resolved_path: str, method: str) -> Callable[[list[pa.Array]], pa.Array]:
-    """The guest function ``method`` of the module at ``resolved_path``;
-    raises :class:`ModuleLoadError` when it cannot be loaded."""
-    return _load_current(resolved_path, method)
+def get_function(
+    resolved_path: str, method: str, version: str | None = None
+) -> Callable[[list[pa.Array]], pa.Array]:
+    """The guest function ``method`` of the module at ``resolved_path``,
+    at ``version`` (default: the file as it is on disk now); raises
+    :class:`ModuleLoadError` when it cannot be loaded."""
+    return _load_current(resolved_path, method, version)
 
 
 def clear_executor_cache() -> None:
@@ -190,6 +199,7 @@ def build_pandas_udf(
     method: str,
     arg_types: Sequence[T.DataType],
     return_type: T.DataType,
+    version: str | None = None,
 ):
     """Build the nondeterministic scalar ``arrow_udf`` wrapping a loaded
     function — the body of ``WasmFunctionWrapper::invoke``
@@ -216,12 +226,14 @@ def build_pandas_udf(
     ``SparkContext.addFile``) reaches the workers (SURVEY §7.5.5).
     Exception: ``.wasm`` modules additionally need the package (for
     :mod:`wasaffi_spark.wasm_backend`) shipped via ``--py-files``.
-    The closure carries the module's version token, taken from the file
-    now, at CREATE time.
+    The closure carries the module's version token: ``version`` when
+    given (CREATE passes the one its spec took, so the file is hashed
+    once per CREATE), else taken from the file now.
     """
     arrow_arg_types = [to_arrow_type(t) for t in arg_types]
     arrow_ret = to_arrow_type(return_type)
-    version = module_version(module_path)
+    if version is None:
+        version = module_version(module_path)
     load = _load
 
     def _invoke(*cols: pa.Array) -> pa.Array:
