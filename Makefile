@@ -41,4 +41,5 @@ nightly-example:
 	python examples/nightly_snapshot.py
 
 smoke:
-	python -m pytest tests/test_engine_udf.py tests/test_ddl.py tests/test_wasm_guest.py -q
+	python -m pytest tests/test_engine_udf.py tests/test_ddl.py tests/test_wasm_guest.py \
+		tests/test_plans.py::test_global_row_number_offsets_are_a_local_relation -q

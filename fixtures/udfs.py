@@ -81,3 +81,36 @@ def batch_len(args: list[pa.Array]) -> pa.Array:
     the Arrow batches Spark sends across the boundary visible from SQL."""
     n = len(args[0])
     return pa.array([n] * n, pa.int64())
+
+
+def zip_importers(args: list[pa.Array]) -> pa.Array:
+    """The number of zip importers in this process's
+    ``sys.path_importer_cache``, on every row."""
+    import sys
+    import zipimport
+
+    n = sum(isinstance(i, zipimport.zipimporter) for i in sys.path_importer_cache.values())
+    return pa.array([n] * len(args[0]), pa.int64())
+
+
+def zip_rereads(args: list[pa.Array]) -> pa.Array:
+    """How many zip archive directories one ``importlib.invalidate_caches()``
+    reads in this process (a PySpark worker makes that call at the start
+    of every task), on every row."""
+    import importlib
+    import zipimport
+
+    reads = 0
+    read_directory = zipimport._read_directory
+
+    def counting(archive):
+        nonlocal reads
+        reads += 1
+        return read_directory(archive)
+
+    zipimport._read_directory = counting
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = read_directory
+    return pa.array([reads] * len(args[0]), pa.int64())

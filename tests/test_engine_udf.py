@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 import os
+import sys
 
 import pytest
 from pyspark.sql import Row
@@ -444,6 +445,74 @@ def test_arrow_batches_end_at_row_cap_or_byte_budget(engine, recommended_posture
     assert batches("blen_d(d)") == {rows: 1}
     engine.sql("DROP FUNCTION blen_v")
     engine.sql("DROP FUNCTION blen_d")
+
+
+ZIP_GUARD_SCRIPT = """
+import importlib, sys, zipfile, zipimport
+archive = sys.argv[1]
+sys.path.insert(0, archive)
+import zmod_a
+from wasaffi_spark.udf_runtime import guard_zip_caches
+
+reads = []
+read_directory = zipimport._read_directory
+def counting(path):
+    reads.append(path)
+    return read_directory(path)
+zipimport._read_directory = counting
+
+importlib.invalidate_caches()
+assert reads == [archive], reads  # the stock method re-reads every time
+guard_zip_caches()
+guard_zip_caches()  # swaps the method once per process
+reads.clear()
+importlib.invalidate_caches()
+importlib.invalidate_caches()
+assert reads == [], reads
+with zipfile.ZipFile(archive, "w") as z:
+    z.writestr("zmod_a.py", "A = 1\\n")
+    z.writestr("zmod_b.py", "B = 2\\n")
+importlib.invalidate_caches()
+assert reads == [archive], reads
+import zmod_b
+reads.clear()
+importlib.invalidate_caches()
+assert reads == [], reads
+print(zmod_a.A, zmod_b.B)
+"""
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="zipimport re-reads lazily")
+def test_zip_directories_are_reread_only_when_changed(tmp_path):
+    # After the guard, invalidate_caches() reads no unchanged archive's
+    # directory, and a rewritten archive's new module becomes importable.
+    import subprocess
+    import zipfile
+
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zmod_a.py", "A = 1\n")
+    proc = subprocess.run(
+        [sys.executable, "-c", ZIP_GUARD_SCRIPT, str(archive)],
+        cwd=REPO, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip() == "1 2"
+
+
+def test_reused_worker_rereads_no_zip_directory(engine):
+    # A Python worker runs importlib.invalidate_caches() at each task's
+    # start; once a UDF batch has run in it, that call reads no zip
+    # archive's directory again.
+    engine.sql(f"CREATE FUNCTION zimp(BIGINT) RETURNS BIGINT AS '{UDFS}!zip_importers'")
+    engine.sql(f"CREATE FUNCTION zread(BIGINT) RETURNS BIGINT AS '{UDFS}!zip_rereads'")
+    query = "select zimp(id) as importers, zread(id) as reads from range(0, 1, 1, 1)"
+    engine.sql(query).collect()
+    [row] = engine.sql(query).collect()
+    assert row["importers"] > 0
+    assert row["reads"] == 0
+    engine.sql("DROP FUNCTION zimp")
+    engine.sql("DROP FUNCTION zread")
 
 
 def test_invoke_accepts_arrow_and_pandas_arguments():

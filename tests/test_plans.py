@@ -450,6 +450,27 @@ def test_global_row_number_never_single_partition_sorts(spark):
     assert got == want
 
 
+def test_global_row_number_offsets_are_a_local_relation(spark):
+    """The per-range offsets frame is a driver-built LocalRelation, so no
+    Python worker task serializes it: the only RDD in the plan is the
+    checkpointed range layout. Ranks equal the naive global window."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from wasaffi_spark.operators.ranking import global_row_number
+
+    df = spark.range(0, 500, 1, 3).select((F.col("id") * 7 % 50).alias("k"), "id")
+    order = [F.desc("k"), F.asc("id")]
+    out = global_row_number(df, order, num_parts=4)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation [_rpid" in plan, plan
+    assert plan.count("LogicalRDD") == 1, plan
+    naive = df.select("id", F.row_number().over(Window.orderBy(*order)).alias("rnk"))
+    got = sorted((r.id, r.rnk) for r in out.select("id", "rnk").collect())
+    assert got == sorted((r.id, r.rnk) for r in naive.collect())
+    assert global_row_number(df.where("id < 0"), order).count() == 0
+
+
 @needs_data
 def test_filtered_ivf_search_join_is_hash_on_cell(spark):
     """The composed filtered×IVF query's search join must be a

@@ -30,6 +30,7 @@ module exists for.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -55,16 +56,17 @@ def _ranked_with_total(
         (r["_rpid"], r["c"])
         for r in ranged.groupBy("_rpid").agg(F.count("*").alias("c")).collect()
     )
-    offsets, acc = [], 0
+    pids, offs, acc = [], [], 0
     for pid, c in counts:
-        offsets.append((pid, acc))
+        pids.append(pid)
+        offs.append(acc)
         acc += c
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            offsets or [(0, 0)], "_rpid int, _off bigint"
-        )
+    # built from an Arrow table, the frame is a LocalRelation: no Python
+    # worker task serializes it and no job broadcasts it
+    offsets = pa.table(
+        {"_rpid": pa.array(pids or [0], pa.int32()), "_off": pa.array(offs or [0], pa.int64())}
     )
+    off_df = F.broadcast(df.sparkSession.createDataFrame(offsets))
     w = Window.partitionBy("_rpid").orderBy(*order_by)
     ranked = (
         ranged.withColumn("_lrn", F.row_number().over(w))

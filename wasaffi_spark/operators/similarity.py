@@ -24,10 +24,12 @@ from __future__ import annotations
 import threading
 from concurrent.futures import Future
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..udf_runtime import guard_zip_caches
 from .overlap import overlap
 
 SIGN_BITS = 8  # coarse cell = sign pattern of the first 8 dims
@@ -215,9 +217,11 @@ def with_cell_rh(
     quant = RH_QUANT  # bound into the closure BY VALUE: a module-global
     # reference would make cloudpickle import this package on executors,
     # breaking the ship-by-value posture every other UDF keeps
+    guard = guard_zip_caches
 
     def _cell(v):  # legacy-signature scalar pandas_udf (no type hints:
         # pd is a local import, so string annotations would not resolve)
+        guard()
         n = len(v)
         M = np.zeros((n, max_dim), dtype=np.int64)
         for r, arr in enumerate(v):
@@ -505,11 +509,16 @@ def ivf_topk(
     )
 
     # centroid frame (tiny) → per-query n_probe nearest cells
-    centers = [
-        (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
-    ]
-    spark = queries.sparkSession
-    cdf = spark.createDataFrame(centers, f"cell int, centroid array<double>")
+    centers = [[float(x) for x in ctr] for ctr in model.clusterCenters()]
+    # an Arrow table becomes a LocalRelation (no Python task builds it)
+    cdf = queries.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "cell": pa.array(range(len(centers)), pa.int32()),
+                "centroid": pa.array(centers, pa.list_(pa.float64())),
+            }
+        )
+    )
     # only the centroid frame (n_cells rows) is guaranteed tiny — the
     # query side may be the whole corpus (all-pairs neardup), so it must
     # NOT be broadcast; AQE picks the probe-join strategy.
