@@ -3,21 +3,84 @@ running Spark."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_recommended_sql_confs_are_accepted(spark, recommended_sql_confs):
-    # Every spark.sql.* option of recommended_builder is a runtime conf
-    # this Spark accepts at its value (Spark checks a value's range when
-    # it is set): set, read back, unset; the session's own value is
-    # restored afterwards.
+    # Every runtime spark.sql.* option of recommended_builder is one this
+    # Spark accepts at its value (Spark checks a value's range when it is
+    # set): set, read back, unset; the session's own value is restored
+    # afterwards. Every other option is a static conf this Spark knows:
+    # it can only be set before the JVM's first session starts.
     confs = recommended_sql_confs
     assert "spark.sql.execution.arrow.maxBytesPerBatch" in confs
+    assert "spark.sql.codegen.cache.maxEntries" in confs
+    is_static = spark._jvm.org.apache.spark.sql.internal.SQLConf.isStaticConfigKey
     for key, value in confs.items():
+        if not spark.conf.isModifiable(key):
+            assert is_static(key), key
+            continue
         saved = spark.conf.get(key, None)
         try:
-            assert spark.conf.isModifiable(key), key
             spark.conf.set(key, value)
             assert spark.conf.get(key) == value, key
             spark.conf.unset(key)
         finally:
             if saved is not None:
                 spark.conf.set(key, saved)
+
+
+CODEGEN_CACHE_SCRIPT = """
+import numpy as np
+
+from wasaffi_spark.conf import recommended_builder
+from wasaffi_spark.operators import similarity
+
+spark = recommended_builder(master="local[2]").config("spark.ui.enabled", "false").getOrCreate()
+key = "spark.sql.codegen.cache.maxEntries"
+assert spark.conf.get(key) == recommended_builder()._options[key]
+compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+rng = np.random.default_rng(7)
+centers = 4.0 * rng.standard_normal((4, 8))
+emb = spark.createDataFrame(
+    [(i, [float(x) for x in centers[i % 4] + rng.standard_normal(8)]) for i in range(72)],
+    "vec_id bigint, embedding array<float>",
+)
+base, batch = emb.where("vec_id < 64"), emb.where("vec_id >= 64")
+deletes = emb.where("vec_id % 13 = 4").select("vec_id")
+queries = emb.where("vec_id < 4")
+graph = similarity.knn_descent(base, k=4, rounds=1, ring=2)
+counts = []
+for _ in range(4):
+    before = compiled.getCount()
+    similarity.graph_maintained_search(
+        queries, graph, base, batch, deletes,
+        k=3, k_graph=4, beam=4, rounds=1, n_entry=4, ring=2, max_reverse=8,
+    ).collect()
+    counts.append(compiled.getCount() - before)
+print(*counts)
+spark.stop()
+"""
+
+
+def test_codegen_cache_holds_the_graph_working_set():
+    # A session from recommended_builder compiles each generated class
+    # of the maintained-search chain once per JVM: a repeat run compiles
+    # at most a tenth of what the first run did. With Spark's default
+    # cache of 100 classes every run compiles about as many as the
+    # first. A repeat can still meet one new AQE plan shape (about 30
+    # classes, then cached), so the quietest of three repeats is
+    # checked. The cache size is static, so this runs in a new JVM.
+    proc = subprocess.run(
+        [sys.executable, "-c", CODEGEN_CACHE_SCRIPT],
+        cwd=REPO, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr
+    first, *repeats = map(int, proc.stdout.strip().splitlines()[-1].split())
+    assert first > 0
+    assert min(repeats) <= first / 10, (first, repeats)

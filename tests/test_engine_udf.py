@@ -500,6 +500,61 @@ def test_zip_directories_are_reread_only_when_changed(tmp_path):
     assert proc.stdout.strip() == "1 2"
 
 
+MAP_IN_PANDAS_GUARD_SCRIPT = """
+from pyspark.sql import SparkSession
+
+from wasaffi_spark.operators.grouped import grouped_median
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+
+
+def probe(batches):
+    import os
+    import zipimport
+
+    import pandas as pd
+
+    for _ in batches:
+        pass
+    checked = getattr(zipimport.zipimporter.invalidate_caches, "stat_checked", False)
+    yield pd.DataFrame({"pid": [os.getpid()], "checked": [checked]})
+
+
+def worker():
+    [row] = spark.range(0, 1, 1, 1).mapInPandas(probe, "pid long, checked boolean").collect()
+    return row
+
+
+before = worker()
+grouped_median(
+    spark.range(0, 8, 1, 1).selectExpr("id % 2 as g", "cast(id as double) as v"),
+    "g", "v", num_partitions=1,
+).collect()
+after = worker()
+print(before.pid == after.pid, before.checked, after.checked)
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="zipimport re-reads lazily")
+def test_map_in_pandas_batch_function_guards_zip_caches():
+    # A mapInPandas batch function of the engine installs the zip guard
+    # in its worker, so the worker's next tasks (here a plain mapInPandas
+    # probe, in the one worker of local[1]) re-read no unchanged archive.
+    import subprocess
+
+    proc = subprocess.run(
+        [sys.executable, "-c", MAP_IN_PANDAS_GUARD_SCRIPT],
+        cwd=REPO, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip().splitlines()[-1] == "True False True"
+
+
 def test_reused_worker_rereads_no_zip_directory(engine):
     # A Python worker runs importlib.invalidate_caches() at each task's
     # start; once a UDF batch has run in it, that call reads no zip

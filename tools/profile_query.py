@@ -10,6 +10,8 @@ For each named query (default: the bench's slowest), reports:
                   tasks counted once (a stage shared between jobs, or
                   skipped because its shuffle output existed, adds
                   nothing), and the tasks those stages completed
+  - compiles    : Janino compilations (generated classes Spark's codegen
+                  cache missed) in the timed region, from CodegenMetrics
 and writes .explain("formatted") to plans/r13/<name>_<tag>.txt.
 
 Usage: python tools/profile_query.py [--tag before|after] [--sf DIR] q1 q2 ...
@@ -70,6 +72,7 @@ def main() -> None:
     plans_dir = os.path.join(REPO, "plans", args.plans_dir)
     os.makedirs(plans_dir, exist_ok=True)
     st = spark.sparkContext.statusTracker()
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     for name in args.queries:
         if name not in qs:
@@ -79,12 +82,14 @@ def main() -> None:
         best = None
         for i in range(args.runs):
             jobs0 = st.getJobIdsForGroup(None) or []
+            compiles0 = compiled.getCount()
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
+            compiles = compiled.getCount() - compiles0
             # the status store is fed by the listener bus: drain it first
             spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
             jobs1 = st.getJobIdsForGroup(None) or []
@@ -109,6 +114,7 @@ def main() -> None:
                 jobs=len(new_jobs),
                 stages=n_stages,
                 tasks=n_tasks,
+                compiles=compiles,
             )
             if best is None or row["total_s"] < best["total_s"]:
                 best = row

@@ -3,8 +3,9 @@
 One place encoding the engine's scale posture (SCALE.md): AQE with
 partition coalescing and skew handling, Arrow transfers for every
 Python-boundary crossing in batches that end at a row cap or a byte
-budget, shuffle partitions sized to the core count, and byte-sized file
-splits for wide (media) rows.
+budget, shuffle partitions sized to the core count, byte-sized file
+splits for wide (media) rows, and a codegen class cache that holds the
+graph controllers' generated classes.
 """
 
 from __future__ import annotations
@@ -61,4 +62,20 @@ def recommended_builder(
         # runtime").
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(2 * 1024 * 1024))
+        # Whole-stage codegen compiles each plan shape into Java classes
+        # (Janino) and keeps them in an LRU cache of 100 by default. One
+        # graph-maintenance op (insert, delete, beam search) runs about
+        # 180 distinct generated classes in a fixed order, so an LRU of
+        # 100 evicts each class before its next use: every op compiled
+        # them all again (~1 s of Janino per op) and ran them cold in
+        # the interpreter. A 256/512/1024/2048 sweep over repeat runs of
+        # the largest composed controllers (graph_policy_applied,
+        # index_maintenance_policy, graph_recall_monitor; SCALE.md
+        # "Global posture") found 1024 the smallest size at which
+        # repeats compile close to nothing (the rest are new AQE plan
+        # shapes); the retained classes cost a few MB of metaspace.
+        # A static conf: it takes effect only when the JVM's first
+        # session starts, and a builder reusing a running session
+        # leaves the cache as it was.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )

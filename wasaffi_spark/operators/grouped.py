@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..udf_runtime import guard_zip_caches
+
 
 def grouped_median(
     df: DataFrame,
@@ -67,10 +69,13 @@ def grouped_median(
         n_rows = proj.count()  # 2-column count: cheap, data-proportional sizing
         num_partitions = max(cores, -(-n_rows // rows_per_partition))
 
+    guard = guard_zip_caches
+
     def medians_of_partition(batches):
         import numpy as np
         import pandas as pd
 
+        guard()
         chunks: dict = {}
         for pdf in batches:
             # percentile_cont ignores NULL values — drop them per batch

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..udf_runtime import guard_zip_caches
+
 MEDIA_SCHEMA = (
     "doc_id bigint, media_type string, payload binary, "
     "meta struct<source:string, n_bytes:bigint>"
@@ -94,11 +96,14 @@ def extract_features(media: DataFrame, carry_cols: tuple[str, ...] = ()) -> Data
         + "n_bytes bigint, digest string, head_byte int"
     )
 
+    guard = guard_zip_caches
+
     def feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
         import pandas as _pd
 
+        guard()
         for pdf in batches:
             payloads = pdf["payload"]
             out = {"doc_id": pdf["doc_id"]}

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..udf_runtime import guard_zip_caches
+
 TOKEN_PATTERN = r"\s+"
 
 
@@ -966,9 +968,12 @@ def compression_ratio(
         "zlib_ratio double"
     )
 
+    guard = guard_zip_caches
+
     def batches(it):
         import zlib
 
+        guard()
         for pdf in it:
             raw = pdf[text_col].fillna("").str.encode("utf-8")
             raw_n = raw.str.len()

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql import types as T
 
+from ..udf_runtime import guard_zip_caches
+
 ARROW_EXTENSIONS = (".arrow", ".arrows", ".feather", ".ipc")
 _FILE_MAGIC = b"ARROW1"
 
@@ -88,11 +90,14 @@ def read_arrow_ipc(spark: SparkSession, path: str) -> DataFrame:
     files_df = spark.read.format("binaryFile").load(_arrow_files(path))
     names = [f.name for f in arrow_schema]
 
+    guard = guard_zip_caches
+
     def decode(batches: Iterator) -> Iterator:
         import io
 
         import pyarrow as _pa
 
+        guard()
         for pdf in batches:
             for blob in pdf["content"]:
                 buf = io.BytesIO(blob)
